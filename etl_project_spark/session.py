@@ -117,19 +117,27 @@ def ensure_shipped(spark: SparkSession) -> None:
     location. ``addPyFile`` ships a zip of the package to every worker
     (current and future) and puts it on their sys.path — the same
     mechanism that distributes code to a 1000-executor cluster.
+
+    The zip is written inside the context's own ``SparkFiles`` root,
+    which Spark deletes when the context stops (or the JVM exits). It
+    must outlive every task: workers fetch the added file lazily, from
+    the path it was added under.
     """
     sc = spark.sparkContext
     if getattr(sc, "_etl_project_spark_shipped", False):
         return
-    import tempfile
     import zipfile
+
+    from pyspark import SparkFiles
 
     import etl_project_spark
 
     pkg_dir = os.path.dirname(os.path.abspath(etl_project_spark.__file__))
     parent = os.path.dirname(pkg_dir)
-    zpath = os.path.join(tempfile.mkdtemp(prefix="etl_project_spark_"),
-                         "etl_project_spark.zip")
+    # a subdirectory: addPyFile copies the zip into the root itself
+    ship_dir = os.path.join(SparkFiles.getRootDirectory(), "etl_project_spark_src")
+    os.makedirs(ship_dir, exist_ok=True)
+    zpath = os.path.join(ship_dir, "etl_project_spark.zip")
     with zipfile.ZipFile(zpath, "w") as z:
         for root, _dirs, files in os.walk(pkg_dir):
             for f in files:

@@ -9,8 +9,12 @@ first-class Spark source instead of driver-side imperative code:
 | S2 header scan → schema discovery   | flows/etl.py:92-114| ``schema()`` asks the fetcher for page-0 headers at plan time |
 | S3 cardinality probe                | flows/etl.py:134-135| fetcher reports ``total_rows`` → number of page partitions |
 | S4 paginated columnar scan          | flows/etl.py:117-183| one ``InputPartition`` per page range; executors fetch pages in parallel |
-| S5 in-source cell extraction        | flows/etl.py:149-159| the fetcher emits final strings (compute pushed into the source) |
-| S6 batch materialize                | flows/etl.py:181   | rows yielded per page ≙ one Arrow batch per page |
+| S5 in-source cell extraction        | flows/etl.py:149-159| the fetcher emits final strings (compute pushed into the source); HTML pages are read by compiled regexes, not a per-tag parser |
+| S6 batch materialize                | flows/etl.py:181   | ``read()`` yields each page as one ``pyarrow.RecordBatch`` — no per-row conversion |
+
+Spark's own fixed cost, outside this module: each ``load()`` and each
+execution of a plan over this source starts a fresh, non-daemon Python
+planner process (≈ 0.3 s each, 4 per two-table load on a 4-core host).
 
 The browser itself is NOT reproduced — fetching is pluggable via a
 ``PageFetcher``. The default :class:`SyntheticShopFetcher` is a
@@ -29,8 +33,10 @@ range fetched sequentially (source-side politeness).
 from __future__ import annotations
 
 import math
+import re
 from collections.abc import Iterator, Sequence
 from dataclasses import dataclass
+from html import unescape
 
 from pyspark.sql.datasource import (
     DataSource,
@@ -181,10 +187,124 @@ class HttpFetcher(PageFetcher):
         return [tuple(row) for row in self._get_json(f"/page/{page}")]
 
 
+# -- HTML extraction ---------------------------------------------------------
+#
+# Compiled once per process. A tag's attributes may hold '>' inside quoted
+# values, so the tag patterns step over quoted strings whole. Tag bodies
+# and element content are written as unrolled loops (runs of plain
+# characters between the special ones), which the regex engine scans far
+# faster than an alternation or a lazy ``.*?`` tried at every character.
+
+#: the inside of a tag up to its closing '>'
+_TAG_BODY = r"""[^>"']*(?:(?:"[^"]*"|'[^']*')[^>"']*)*"""
+_ATTRS = rf"(?:[\s/]{_TAG_BODY})?"
+
+
+def _element_re(tag: str) -> re.Pattern:
+    """``<tag ...>content</tag>``, case-insensitive; group 1 = content."""
+    return re.compile(
+        rf"<{tag}{_ATTRS}>([^<]*(?:<(?!/{tag}\s*>)[^<]*)*)</{tag}\s*>", re.I
+    )
+
+
+_TBODY_RE = _element_re("tbody")
+_TR_RE = _element_re("tr")
+_TD_RE = _element_re("td")
+_TH_RE = _element_re("th")
+_COMMENT_RE = re.compile(r"<!--.*?--\s*>", re.S)
+_TAG_RE = re.compile(rf"</?[a-zA-Z]{_TAG_BODY}>")
+#: a start tag; group 1 = its attribute text
+_START_TAG_RE = re.compile(rf"<[a-zA-Z][^\t\n\r\f />\x00]*({_TAG_BODY})>")
+# The stdlib HTML parser's attribute grammar (``attrfind_tolerant``), so
+# names and values read exactly as an event-driven parser reads them;
+# groups: name, single-quoted, double-quoted, bare value.
+_ATTR_RE = re.compile(
+    r"""((?<=['"\s/])[^\s/>][^\s/=>]*)"""
+    r"""(?:\s*=+\s*(?:'([^']*)'|"([^"]*)"|(?!['"])([^>\s]*)))?"""
+)
+_DIV_END_RE = re.compile(r"</div\s*>", re.I)
+#: the reference's locate-button coordinate regex (flows/etl.py:149-159)
+_COORD_RE = re.compile(r"\(([-+]?\d+\.\d+),\s*([-+]?\d+\.\d+)")
+#: the reference's record-count regex (flows/etl.py:134-135)
+_COUNT_RE = re.compile(r"\d[\d\.]*")
+
+
+def _attrs(html: str, tag: re.Match) -> dict:
+    """Attributes of a ``_START_TAG_RE`` match: names lower-cased, values
+    unquoted and unescaped ('' when absent), a repeated name keeps its
+    last value."""
+    attrs = {}
+    for name, single, double, bare in _ATTR_RE.findall(
+        html, tag.start(1), tag.end(1)
+    ):
+        value = single or double or bare
+        attrs[name.lower()] = unescape(value) if "&" in value else value
+    return attrs
+
+
+def _text(fragment: str) -> str:
+    """Text content: tags dropped, entities resolved (comments are
+    already gone)."""
+    return unescape(_TAG_RE.sub("", fragment))
+
+
+def _cell_value(cell: str) -> str:
+    if "<" not in cell:  # plain text, the common case
+        return (unescape(cell) if "&" in cell else cell).strip()
+    value = None
+    if "boton_ir" in cell:
+        # locate button: the coordinate lives in onclick, not in the
+        # text; the last button of the cell wins
+        for tag in _START_TAG_RE.finditer(cell):
+            if "boton_ir" in tag.group(1):
+                attrs = _attrs(cell, tag)
+                if "boton_ir" in attrs.get("class", ""):
+                    c = _COORD_RE.search(attrs.get("onclick", ""))
+                    value = f"{c.group(1)},{c.group(2)}" if c else ""
+    return _text(cell).strip() if value is None else value
+
+
+def _info_line(html: str) -> str:
+    """Text of the last ``id="table_id_info"`` element up to the next
+    ``</div>``, unstripped; '' when there is none."""
+    info = ""
+    pos = html.find("table_id_info")
+    while pos >= 0:
+        tag = _START_TAG_RE.match(html, html.rfind("<", 0, pos))
+        if tag and tag.end() > pos and _attrs(html, tag).get("id") == "table_id_info":
+            close = _DIV_END_RE.search(html, tag.end())
+            if close:
+                info = _text(html[tag.end():close.start()])
+        pos = html.find("table_id_info", pos + 1)
+    return info
+
+
+def parse_table_page(html: str) -> dict:
+    """Headers, body rows and info line of one DataTables page:
+    ``{"headers": [...], "rows": [[cell, ...]], "info": str}``. Rows
+    with no cells are dropped; the info line is not stripped."""
+    if "<!--" in html:
+        html = _COMMENT_RE.sub("", html)
+    rows = []
+    for body in _TBODY_RE.findall(html):
+        for tr in _TR_RE.findall(body):
+            cells = [_cell_value(td) for td in _TD_RE.findall(tr)]
+            if cells:
+                rows.append(cells)
+    return {
+        "headers": [_text(h).strip() for h in _TH_RE.findall(html)],
+        "rows": rows,
+        "info": _info_line(html),
+    }
+
+
 @dataclass
 class HtmlTableFetcher(PageFetcher):
-    """HTML-table pagination with the reference's exact scraping
-    semantics (flows/etl.py:92-183) — no browser, stdlib only:
+    r"""HTML-table pagination with the reference's exact scraping
+    semantics (flows/etl.py:92-183) — no browser, stdlib only. Pages are
+    read by compiled regular expressions (:func:`parse_table_page`):
+    ``<tbody>`` → ``<tr>`` → ``<td>``, plain-text cells taken as they
+    are, any other cell tag-stripped and entity-resolved.
 
     - **S2 header scan**: ``<th>`` texts, skipping the first
       ``skip_headers`` (the reference slices ``table_header[4:]``,
@@ -192,11 +312,11 @@ class HtmlTableFetcher(PageFetcher):
       columns).
     - **S3 cardinality probe**: the DataTables info line (element id
       ``table_id_info``, e.g. ``"Mostrando 1 a 100 de 1.234
-      registros"``) parsed with the reference's regex ``\\d[\\d\\.]*``,
+      registros"``) parsed with the reference's regex ``\d[\d\.]*``,
       LAST match, dots-as-thousands stripped (flows/etl.py:134-135).
     - **S5 cell extraction**: for a cell carrying a ``boton_ir``
       locate button, the packed coordinate comes from the button's
-      ``onclick`` via ``\\(([-+]?\\d+\\.\\d+),\\s*([-+]?\\d+\\.\\d+)``
+      ``onclick`` via ``\(([-+]?\d+\.\d+),\s*([-+]?\d+\.\d+)``
       → ``"lat,lng"``, regex-miss → ``''`` (flows/etl.py:149-159);
       plain cells yield stripped text (so a literal ``No disponible``
       cell survives as the third sentinel).
@@ -205,15 +325,28 @@ class HtmlTableFetcher(PageFetcher):
       (flows/etl.py:164-175); politeness is the partition-level
       ``max_concurrency`` cap, same as the reference's 2-session
       browser limit.
+
+    On well-formed pages this reads exactly what an event-driven
+    ``html.parser`` scan reads (entities, nested inline tags and
+    comments in cells, any attribute quoting, upper-case tags, rows
+    outside ``<tbody>`` ignored). It deliberately differs on
+    pathological HTML:
+
+    - an omitted end tag (``</td>``, ``</tr>``, ``</tbody>``,
+      ``</th>``) hides that element instead of being implied;
+    - a nested table inside a cell ends the outer cell at the inner
+      ``</td>``;
+    - ``<td>`` cells after the last ``<tbody>`` (e.g. in a
+      ``<tfoot>``) are ignored rather than appended to the last body
+      row;
+    - ``boton_ir`` spelled with an entity (``boton&#95;ir``) does not
+      mark a locate button.
     """
 
     base_url: str
     page_param: str = "page"
     skip_headers: int = 4
     timeout_s: float = 10.0
-
-    _COORD_RE = r"\(([-+]?\d+\.\d+),\s*([-+]?\d+\.\d+)"
-    _COUNT_RE = r"\d[\d\.]*"
 
     def _get_html(self, page: int) -> str:
         import urllib.request
@@ -223,75 +356,10 @@ class HtmlTableFetcher(PageFetcher):
         with urllib.request.urlopen(url, timeout=self.timeout_s) as resp:
             return resp.read().decode("utf-8", errors="replace")
 
-    def _parse(self, html: str) -> dict:
-        """One-pass stdlib-parser extraction of headers, body rows, and
-        the info line. Returns {"headers": [...], "rows": [[cell,...]],
-        "info": str}."""
-        import re as _re
-        from html.parser import HTMLParser
-
-        coord_re = _re.compile(self._COORD_RE)
-
-        class _P(HTMLParser):
-            def __init__(self):
-                super().__init__()
-                self.headers: list[str] = []
-                self.rows: list[list[str]] = []
-                self.info = ""
-                self._stack: list[str] = []
-                self._text: list[str] = []
-                self._cell: str | None = None
-                self._in_info = False
-                self._in_tbody = False
-
-            def handle_starttag(self, tag, attrs):
-                a = dict(attrs)
-                self._stack.append(tag)
-                if tag == "th":
-                    self._text = []
-                elif tag == "tbody":
-                    self._in_tbody = True
-                elif tag == "tr" and self._in_tbody:
-                    self.rows.append([])
-                elif tag == "td":
-                    self._text = []
-                    self._cell = None
-                elif a.get("id") == "table_id_info":
-                    self._in_info = True
-                    self._text = []
-                elif "boton_ir" in (a.get("class") or ""):
-                    # locate button: coordinate lives in onclick, not text
-                    m = coord_re.search(a.get("onclick") or "")
-                    self._cell = f"{m.group(1)},{m.group(2)}" if m else ""
-
-            def handle_endtag(self, tag):
-                while self._stack and self._stack.pop() != tag:
-                    pass
-                if tag == "th":
-                    self.headers.append("".join(self._text).strip())
-                elif tag == "tbody":
-                    self._in_tbody = False
-                elif tag == "td" and self.rows:
-                    self.rows[-1].append(
-                        self._cell
-                        if self._cell is not None
-                        else "".join(self._text).strip()
-                    )
-                elif tag == "div" and self._in_info:
-                    self.info = "".join(self._text)
-                    self._in_info = False
-
-            def handle_data(self, data):
-                self._text.append(data)
-
-        p = _P()
-        p.feed(html)
-        return {"headers": p.headers, "rows": [r for r in p.rows if r], "info": p.info}
-
     def _page0(self) -> dict:
         cached = getattr(self, "_page0_doc", None)
         if cached is None:
-            cached = self._parse(self._get_html(0))
+            cached = parse_table_page(self._get_html(0))
             object.__setattr__(self, "_page0_doc", cached)
         return cached
 
@@ -302,9 +370,7 @@ class HtmlTableFetcher(PageFetcher):
         return self._page0()["headers"][self.skip_headers:]
 
     def total_rows(self) -> int:
-        import re as _re
-
-        nums = _re.findall(self._COUNT_RE, self._page0()["info"])
+        nums = _COUNT_RE.findall(self._page0()["info"])
         if not nums:
             raise ValueError(
                 "no record count in table_id_info: " + self._page0()["info"][:80]
@@ -315,7 +381,7 @@ class HtmlTableFetcher(PageFetcher):
         return max(1, len(self._page0()["rows"]))
 
     def fetch_page(self, page: int) -> Sequence[tuple]:
-        doc = self._page0() if page == 0 else self._parse(self._get_html(page))
+        doc = self._page0() if page == 0 else parse_table_page(self._get_html(page))
         width = len(self.headers())
         # The widget's 4 control columns precede the data columns in the
         # header row only; body rows carry just the data cells.
@@ -343,10 +409,41 @@ class _PageRangePartition(InputPartition):
         self.last_page = last_page  # inclusive
 
 
+def _spark_str(value) -> str | None:
+    """A value as PySpark's row path stores it in a string column."""
+    if value is None:
+        return None
+    if isinstance(value, bool):
+        return "true" if value else "false"
+    return str(value)
+
+
+def _page_batch(rows: Sequence[Sequence], names: list[str], page: int):
+    """One page's rows as one ``pyarrow.RecordBatch`` of string columns
+    named ``names``, with the values PySpark's per-row conversion would
+    produce: None → null, bool → ``'true'``/``'false'``, any other
+    non-str → ``str(v)``."""
+    import pyarrow as pa
+
+    width = len(names)
+    for i, row in enumerate(rows):
+        if len(row) != width:
+            raise ValueError(
+                f"page {page} row {i} has {len(row)} cells, expected "
+                f"{width} (columns: {names})"
+            )
+    columns = zip(*rows) if rows else [()] * width
+    return pa.RecordBatch.from_arrays(
+        [pa.array([_spark_str(v) for v in col], pa.string()) for col in columns],
+        names=names,
+    )
+
+
 class PaginatedTableReader(DataSourceReader):
-    def __init__(self, fetcher: PageFetcher, max_concurrency: int):
+    def __init__(self, fetcher: PageFetcher, max_concurrency: int, schema: StructType):
         self.fetcher = fetcher
         self.max_concurrency = max_concurrency
+        self.names = schema.fieldNames()
 
     def partitions(self) -> Sequence[InputPartition]:
         n_pages = max(1, math.ceil(self.fetcher.total_rows() / self.fetcher.page_size()))
@@ -359,13 +456,14 @@ class PaginatedTableReader(DataSourceReader):
             for first in range(0, n_pages, pages_per_part)
         ]
 
-    def read(self, partition: _PageRangePartition) -> Iterator[tuple]:
+    def read(self, partition: _PageRangePartition) -> Iterator:
         # One connection per partition, pages fetched sequentially within
         # it (politeness); task retry re-reads the whole range, which is
         # safe because fetch_page is required to be deterministic-ish
-        # per page (same contract as any re-scannable source).
+        # per page (same contract as any re-scannable source). Each page
+        # goes to Spark as one Arrow batch, never row by row.
         for page in range(partition.first_page, partition.last_page + 1):
-            yield from partition.fetcher.fetch_page(page)
+            yield _page_batch(partition.fetcher.fetch_page(page), self.names, page)
 
 
 class PaginatedStreamReader(SimpleDataSourceStreamReader):
@@ -447,7 +545,7 @@ class PaginatedTableDataSource(DataSource):
 
     def reader(self, schema: StructType) -> DataSourceReader:
         return PaginatedTableReader(
-            self._fetcher(), int(self.options.get("max_concurrency", 8))
+            self._fetcher(), int(self.options.get("max_concurrency", 8)), schema
         )
 
     def simpleStreamReader(self, schema: StructType) -> PaginatedStreamReader:

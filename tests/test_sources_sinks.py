@@ -59,17 +59,12 @@ def test_sentinel_mix_is_stable(spark):
     assert counts["packed"] > counts["nb"] > counts["miss"] > 0
 
 
-def test_http_fetcher_source_reads_fixture_server(spark):
-    """The non-synthetic fetcher: a local HTTP server implements the
-    /meta + /page/{i} contract; the same DataSource reads through it —
-    schema from /meta, rows page-partitioned, values exact."""
+def _json_table_server(headers: list[str], data: list[list], page_size: int):
+    """Fixture server for :class:`HttpFetcher`'s ``/meta`` +
+    ``/page/{i}`` JSON contract."""
     import http.server
     import json
     import threading
-
-    headers = ["name", "city", "coord"]
-    data = [[f"Shop {i}", f"City {i % 5}", f"{i}.0,{-i}.0"] for i in range(23)]
-    page_size = 10
 
     class Handler(http.server.BaseHTTPRequestHandler):
         def do_GET(self):
@@ -95,6 +90,16 @@ def test_http_fetcher_source_reads_fixture_server(spark):
 
     srv = http.server.ThreadingHTTPServer(("127.0.0.1", 0), Handler)
     threading.Thread(target=srv.serve_forever, daemon=True).start()
+    return srv
+
+
+def test_http_fetcher_source_reads_fixture_server(spark):
+    """The non-synthetic fetcher: a local HTTP server implements the
+    /meta + /page/{i} contract; the same DataSource reads through it —
+    schema from /meta, rows page-partitioned, values exact."""
+    headers = ["name", "city", "coord"]
+    data = [[f"Shop {i}", f"City {i % 5}", f"{i}.0,{-i}.0"] for i in range(23)]
+    srv = _json_table_server(headers, data, page_size=10)
     try:
         url = f"http://127.0.0.1:{srv.server_address[1]}"
         df = _src(spark, base_url=url, max_concurrency=3)
@@ -244,6 +249,61 @@ def test_http_fetcher_refresh_discovers_growth():
     finally:
         srv.shutdown()
         srv.server_close()
+
+
+def test_reader_rows_equal_concatenated_fetch_pages(spark):
+    """For every fetcher, a scan returns exactly the rows ``fetch_page``
+    gives over all pages — with a partial last page and for a zero-row
+    table — and JSON cells that are not strings land as PySpark's row
+    conversion stores them: 5 → '5', 1.5 → '1.5', true → 'true',
+    null → NULL."""
+    import math
+    from collections import Counter
+
+    from etl_project_spark.sources.paginated import HtmlTableFetcher, HttpFetcher
+
+    def as_spark_str(v):
+        return None if v is None else str(v).lower() if isinstance(v, bool) else str(v)
+
+    def pages_concat(f):
+        n_pages = max(1, math.ceil(f.total_rows() / f.page_size()))
+        rows = [row for p in range(n_pages) for row in f.fetch_page(p)]
+        return Counter(tuple(as_spark_str(v) for v in row) for row in rows)
+
+    def scan(**opts):
+        df = _src(spark, **opts)
+        return df.columns, Counter(tuple(r) for r in df.collect())
+
+    for n in (257, 0):
+        f = SyntheticShopFetcher(n_rows=n, rows_per_page=100)
+        assert scan(n_rows=n, rows_per_page=100) == (f.headers(), pages_concat(f))
+
+    headers = ["a", "b", "c", "d"]
+    mixed = [[5, 1.5, True, None]] + [[f"s{i}", -i, i % 2 == 0, f"t{i}"] for i in range(9)]
+    for data in (mixed, []):
+        srv = _json_table_server(headers, data, page_size=4)
+        try:
+            url = f"http://127.0.0.1:{srv.server_address[1]}"
+            cols, got = scan(base_url=url, max_concurrency=2)
+            assert (cols, got) == (headers, pages_concat(HttpFetcher(base_url=url)))
+            assert sum(got.values()) == len(data)
+            if data:
+                assert got[("5", "1.5", "true", None)] == 1
+        finally:
+            srv.shutdown()
+            srv.server_close()
+
+    for n in (1234, 0):
+        srv = _html_shop_server(n_rows=n, page_size=100)
+        try:
+            url = f"http://127.0.0.1:{srv.server_address[1]}/table"
+            cols, got = scan(base_url=url, format="html", max_concurrency=4)
+            f = HtmlTableFetcher(base_url=url)
+            assert (cols, got) == (f.headers(), pages_concat(f))
+            assert sum(got.values()) == n
+        finally:
+            srv.shutdown()
+            srv.server_close()
 
 
 def test_jdbc_sink_roundtrip_live(spark):
