@@ -19,6 +19,10 @@ paths, broadcast/AQE-friendly joins.
 
 __version__ = "0.1.0"
 
+from etl_project_spark import _zipcache
+
+_zipcache.install()
+
 from etl_project_spark.catalog import TABLES, read_table, register_views
 from etl_project_spark.session import get_spark, tune_session
 

@@ -251,12 +251,11 @@ def q_minhash_indexed_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
     no-documents-scan property is asserted in
     tests/test_dedup_index.py.
 
-    The index lands in a per-(process, corpus-abspath) unique temp dir
-    (the IVF precedent's race note, hardened per ADVICE r15 —
-    ``query_scoped_index_dir``): a path shared across processes raced —
-    one session's overwrite deleting part-files under another's probe
-    scan. The few-MB leak per process is bounded (one dir per
-    (pid, corpus)) and lives under the OS-reaped /tmp.
+    The index lands in a per-(context, corpus-abspath) unique dir that
+    the context's end removes (the IVF precedent's race note, hardened
+    per ADVICE r15 — ``query_scoped_index_dir``): a path shared across
+    processes raced — one session's overwrite deleting part-files under
+    another's probe scan.
     """
     from etl_project_spark.sources.dedup_index import (
         load_minhash_index,
@@ -264,7 +263,7 @@ def q_minhash_indexed_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
         query_scoped_index_dir,
     )
 
-    path = query_scoped_index_dir("minhash", sf_dir)
+    path = query_scoped_index_dir(spark, "minhash", sf_dir)
     idx = persist_minhash_index(
         spark, sf_dir, n_hashes=64, shingle_k=3, use_token_ngrams=True,
         path=path, register=False,
@@ -310,7 +309,7 @@ def q_minhash_index_append_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
     is self-contained and deterministic; ``register=False`` keeps the
     index caller-scoped (the inflight twin's timing series stays
     inflight — see ``q_minhash_indexed_pairs``). Same
-    per-(process, corpus-abspath) temp dir contract; append-vs-rebuild
+    per-(context, corpus-abspath) dir contract; append-vs-rebuild
     economics are measured in BASELINE.md (round 16).
     """
     from etl_project_spark.sources.dedup_index import (
@@ -321,7 +320,7 @@ def q_minhash_index_append_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
         query_scoped_index_dir,
     )
 
-    path = query_scoped_index_dir("minhash_append", sf_dir)
+    path = query_scoped_index_dir(spark, "minhash_append", sf_dir)
     idx = persist_minhash_index(
         spark, sf_dir, n_hashes=64, shingle_k=3, use_token_ngrams=True,
         path=path, register=False, docs=_history_docs(spark, sf_dir),
@@ -395,7 +394,7 @@ def q_minhash_batch_probe_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
     hist = aug.filter(F.col("source") != BATCH_SOURCE)
     batch = aug.filter(F.col("source") == BATCH_SOURCE)
 
-    path = query_scoped_index_dir("minhash_probe", sf_dir)
+    path = query_scoped_index_dir(spark, "minhash_probe", sf_dir)
     idx = persist_minhash_index(
         spark, sf_dir, n_hashes=64, shingle_k=3, use_token_ngrams=True,
         path=path, register=False, docs=hist,
@@ -480,7 +479,7 @@ def q_minhash_index_delete_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
         (F.col("source") != BATCH_SOURCE) & (bucket40 == 7)
     ).select((F.col("doc_id") + 50_000_000).alias("_id"))
 
-    path = query_scoped_index_dir("minhash_delete", sf_dir)
+    path = query_scoped_index_dir(spark, "minhash_delete", sf_dir)
     idx = persist_minhash_index(
         spark, sf_dir, n_hashes=64, shingle_k=3, use_token_ngrams=True,
         path=path, register=False, docs=hist,
@@ -652,7 +651,7 @@ def q_simhash_index_append_matches(spark: SparkSession, sf_dir: str) -> DataFram
     appended = aug.filter(F.col("source") == "src18")
     probe = aug.filter(F.col("source") == BATCH_SOURCE)
 
-    path = query_scoped_index_dir("simhash_append", sf_dir)
+    path = query_scoped_index_dir(spark, "simhash_append", sf_dir)
     idx = persist_simhash_index(
         spark, sf_dir, max_hamming=6, eq_blocks=2,
         path=path, register=False, docs=older,

@@ -589,7 +589,7 @@ def q_nkey_indexed_curation_audit(spark: SparkSession, sf_dir: str) -> DataFrame
     history-scan-free property of the served plan is asserted in
     tests/test_dedup_index.py.
 
-    Per-(process, corpus-abspath) unique temp dir for the same
+    Per-(context, corpus-abspath) unique dir for the same
     overwrite-race reason as the IVF/PQ/MinHash indexed queries
     (``query_scoped_index_dir``, ADVICE r15).
     """
@@ -600,7 +600,7 @@ def q_nkey_indexed_curation_audit(spark: SparkSession, sf_dir: str) -> DataFrame
     )
 
     tune_session(spark)
-    path = query_scoped_index_dir("nkey", sf_dir)
+    path = query_scoped_index_dir(spark, "nkey", sf_dir)
     idx = persist_nkey_index(spark, sf_dir, path=path, register=False)
     return _incremental_audit_from_history(
         spark, sf_dir, load_nkey_index(spark, idx)
@@ -644,7 +644,7 @@ def q_nkey_index_append_audit(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
     tune_session(spark)
-    path = query_scoped_index_dir("nkey_append", sf_dir)
+    path = query_scoped_index_dir(spark, "nkey_append", sf_dir)
     d = read_table(spark, sf_dir, "documents")
     older = d.filter(
         (F.col("source") != BATCH_SOURCE) & (F.col("source") != "src18")

@@ -312,23 +312,17 @@ def q_knn_ivf_indexed_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     indexed path must return bit-identical results to the in-flight
     path, so one SQL twin checks both.
 
-    The index lands in a per-process unique temp dir: a path shared
+    The index lands in a per-(context, corpus) unique dir that the
+    context's end removes (``query_scoped_index_dir``): a path shared
     across processes raced (one session's overwrite deleting
-    part-files under another's probe scan). The few-MB leak per
-    process is bounded (one dir per (pid, sf)) and lives under the
-    OS-reaped /tmp.
+    part-files under another's probe scan).
     """
-    import os as _os
-    import tempfile as _tempfile
+    from etl_project_spark.sources.dedup_index import query_scoped_index_dir
 
     tune_session(spark)
     e = read_table(spark, sf_dir, "embeddings")
     cents = SIM.deterministic_centroids(e, "embedding", "vec_id", n_cells=16)
-    path = _os.path.join(
-        _tempfile.gettempdir(),
-        f"etl_project_spark_ivf_{_os.getpid()}",
-        _os.path.basename(sf_dir.rstrip("/")) or "sf",
-    )
+    path = query_scoped_index_dir(spark, "ivf", sf_dir)
     SIM.ivf_write_index(e, "embedding", cents, path, id_col="vec_id")
     return SIM.ivf_topk_indexed(
         spark, path, "embedding", QUERY_VEC, cents, k=10, id_col="vec_id", n_probe=4
@@ -381,22 +375,17 @@ def q_knn_ivf_appended_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     pins the drift→rebalance→recall cycle; BASELINE.md round 17
     carries the recall-vs-append-fraction table).
 
-    Same per-(process, corpus) temp-dir + self-contained-build
-    contract as the indexed twin.
+    Same per-(context, corpus) dir + self-contained-build contract as
+    the indexed twin.
     """
-    import os as _os
-    import tempfile as _tempfile
+    from etl_project_spark.sources.dedup_index import query_scoped_index_dir
 
     tune_session(spark)
     e = read_table(spark, sf_dir, "embeddings")
     hist = e.filter(F.col("vec_id") % 10 != 3)
     batch = e.filter(F.col("vec_id") % 10 == 3)
     cents = SIM.deterministic_centroids(hist, "embedding", "vec_id", n_cells=16)
-    path = _os.path.join(
-        _tempfile.gettempdir(),
-        f"etl_project_spark_ivf_app_{_os.getpid()}",
-        _os.path.basename(sf_dir.rstrip("/")) or "sf",
-    )
+    path = query_scoped_index_dir(spark, "ivf_app", sf_dir)
     SIM.ivf_write_index(hist, "embedding", cents, path, id_col="vec_id")
     SIM.ivf_append_index(batch, "embedding", cents, path, id_col="vec_id")
     return SIM.ivf_topk_indexed(
@@ -862,9 +851,9 @@ def q_pq_adc_indexed_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     path must return bit-identical results to the encode-per-query
     path, so one SQL twin checks both — and the serving scan touches 8
     int codes per vector instead of 64 floats, the 100 TB residency
-    win quantization exists for. The build lands in a per-process
-    unique dir (shared paths raced across sessions; bounded few-MB
-    leak under OS-reaped /tmp). ``register=False``: running this query
+    win quantization exists for. The build lands in a per-context
+    unique dir that the context's end removes (shared paths raced
+    across sessions). ``register=False``: running this query
     must not flip the OTHER PQ queries into served mode.
     """
     from etl_project_spark.sources.ann_index import (

@@ -8,9 +8,12 @@ relies on (UTC session timezone for oracle parity, AQE on).
 
 from __future__ import annotations
 
+import logging
 import os
 
 from pyspark.sql import SparkSession
+
+_log = logging.getLogger(__name__)
 
 #: Runtime-settable confs applied to any session we touch. These are
 #: safe to set on a live session (unlike e.g. driver memory).
@@ -47,14 +50,23 @@ _RUNTIME_CONFS = {
 
 
 def tune_session(spark: SparkSession) -> SparkSession:
-    """Apply runtime confs; idempotent and cheap — call from any entry point."""
+    """Apply runtime confs; idempotent and cheap — call from any entry point.
+
+    A conf whose set raises (a hosting harness may mark some static)
+    never fails a query over a tuning knob: it is recorded in the
+    context's ``_etl_failed_confs`` (conf → error) and logged once.
+    """
+    sc = spark.sparkContext
+    failed = getattr(sc, "_etl_failed_confs", None)
+    if failed is None:
+        failed = sc._etl_failed_confs = {}
     for k, v in _RUNTIME_CONFS.items():
         try:
             spark.conf.set(k, v)
-        except Exception:
-            # Some confs may be marked static by the hosting harness;
-            # never fail a query over a tuning knob.
-            pass
+        except Exception as e:
+            if k not in failed:
+                failed[k] = (str(e) or repr(e)).splitlines()[0]
+                _log.warning("tune_session could not set %s=%s: %s", k, v, failed[k])
     ensure_shipped(spark)
     return spark
 
@@ -108,6 +120,13 @@ def release_persists(blocking: bool = False) -> int:
     return n
 
 
+def context_dir(spark: SparkSession, name: str) -> str:
+    """``<SparkFiles root>/<name>`` on the driver: a directory that Spark
+    deletes with the context, when it stops or the JVM exits."""
+    jvm = spark.sparkContext._jvm
+    return os.path.join(jvm.org.apache.spark.SparkFiles.getRootDirectory(), name)
+
+
 def ensure_shipped(spark: SparkSession) -> None:
     """Make ``etl_project_spark`` importable inside Python workers.
 
@@ -118,24 +137,21 @@ def ensure_shipped(spark: SparkSession) -> None:
     (current and future) and puts it on their sys.path — the same
     mechanism that distributes code to a 1000-executor cluster.
 
-    The zip is written inside the context's own ``SparkFiles`` root,
-    which Spark deletes when the context stops (or the JVM exits). It
-    must outlive every task: workers fetch the added file lazily, from
-    the path it was added under.
+    The zip is written inside the context's own directory
+    (:func:`context_dir`). It must outlive every task: workers fetch the
+    added file lazily, from the path it was added under.
     """
     sc = spark.sparkContext
     if getattr(sc, "_etl_project_spark_shipped", False):
         return
     import zipfile
 
-    from pyspark import SparkFiles
-
     import etl_project_spark
 
     pkg_dir = os.path.dirname(os.path.abspath(etl_project_spark.__file__))
     parent = os.path.dirname(pkg_dir)
     # a subdirectory: addPyFile copies the zip into the root itself
-    ship_dir = os.path.join(SparkFiles.getRootDirectory(), "etl_project_spark_src")
+    ship_dir = context_dir(spark, "etl_project_spark_src")
     os.makedirs(ship_dir, exist_ok=True)
     zpath = os.path.join(ship_dir, "etl_project_spark.zip")
     with zipfile.ZipFile(zpath, "w") as z:

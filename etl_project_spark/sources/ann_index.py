@@ -38,7 +38,6 @@ travels with the codes.
 from __future__ import annotations
 
 import os
-import tempfile
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
@@ -105,14 +104,12 @@ def persist_pq_index(
     seeds = SIM.deterministic_centroids(e, "embedding", "vec_id", n_cells=n_cells)
     cbs = SIM.pq_codebooks(seeds, n_sub)
     if path is None:
-        # per-process unique dir: a shared path raced across sessions
+        # per-context unique dir: a shared path raced across sessions
         # (one overwrite deleting part-files under another's scan) —
         # same isolation rule as q_knn_ivf_indexed_topk's index dir.
-        path = os.path.join(
-            tempfile.gettempdir(),
-            f"etl_project_spark_pq_{os.getpid()}",
-            os.path.basename(os.path.abspath(sf_dir)) or "sf",
-        )
+        from etl_project_spark.sources.dedup_index import query_scoped_index_dir
+
+        path = query_scoped_index_dir(spark, "pq", sf_dir)
     enc = SIM.ivf_assign(e, "embedding", seeds).select(
         "vec_id",
         "_cell",

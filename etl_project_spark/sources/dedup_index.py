@@ -274,29 +274,28 @@ def _register_bucketed_index(
     )
 
 
-def query_scoped_index_dir(kind: str, sf_dir: str) -> str:
-    """Deterministic per-(process, corpus) temp directory for a
-    caller-scoped index build inside a registry query.
+def query_scoped_index_dir(spark: SparkSession, kind: str, sf_dir: str) -> str:
+    """Deterministic per-(context, corpus) directory for a caller-scoped
+    index build inside a registry query.
 
-    Per-PID so two sessions in different processes can never overwrite
-    part-files under each other's in-flight probe scan (the IVF race
-    note), and keyed by a short hash of the ABSOLUTE corpus path, not
-    its basename (ADVICE r15: two corpora named ``sf1`` under different
-    parents collided within one process — exactly the overwrite race
-    the unique dir exists to prevent, just one level up). The basename
-    stays in the path for human-readable /tmp listings. The few-MB leak
-    per (pid, corpus) is bounded and lives under the OS-reaped /tmp.
+    Rooted in the context's own directory (``session.context_dir``),
+    so no build outlives its session. Per context, so two sessions in
+    different processes can never overwrite part-files under each
+    other's in-flight probe scan (the IVF race note), and keyed by a
+    short hash of the ABSOLUTE corpus path, not its basename (ADVICE
+    r15: two corpora named ``sf1`` under different parents collided
+    within one process — exactly the overwrite race the unique dir
+    exists to prevent, just one level up). The basename stays in the
+    path for human-readable listings.
     """
     import hashlib
+
+    from etl_project_spark.session import context_dir
 
     ap = os.path.abspath(sf_dir)
     tag = hashlib.sha1(ap.encode()).hexdigest()[:8]
     base = os.path.basename(sf_dir.rstrip("/")) or "sf"
-    return os.path.join(
-        tempfile.gettempdir(),
-        f"etl_project_spark_{kind}_{os.getpid()}",
-        f"{base}_{tag}",
-    )
+    return os.path.join(context_dir(spark, f"etl_project_spark_{kind}"), f"{base}_{tag}")
 
 
 _GRAM: dict[str, GramIndex] = {}

@@ -6,15 +6,28 @@ first-class Spark source instead of driver-side imperative code:
 | Reference step                      | file:line          | Here |
 |-------------------------------------|--------------------|------|
 | S1 remote session open + retry      | flows/etl.py:67-90 | per-partition connection in ``read()``; retries via ``spark.task.maxFailures`` |
-| S2 header scan → schema discovery   | flows/etl.py:92-114| ``schema()`` asks the fetcher for page-0 headers at plan time |
+| S2 header scan → schema discovery   | flows/etl.py:92-114| ``schema()`` asks the fetcher for page-0 headers at ``load()`` |
 | S3 cardinality probe                | flows/etl.py:134-135| fetcher reports ``total_rows`` → number of page partitions |
 | S4 paginated columnar scan          | flows/etl.py:117-183| one ``InputPartition`` per page range; executors fetch pages in parallel |
 | S5 in-source cell extraction        | flows/etl.py:149-159| the fetcher emits final strings (compute pushed into the source); HTML pages are read by compiled regexes, not a per-tag parser |
 | S6 batch materialize                | flows/etl.py:181   | ``read()`` yields each page as one ``pyarrow.RecordBatch`` — no per-row conversion |
 
-Spark's own fixed cost, outside this module: each ``load()`` and each
-execution of a plan over this source starts a fresh, non-daemon Python
-planner process (≈ 0.3 s each, 4 per two-table load on a 4-core host).
+Page 0 is fetched once per ``load()``. The fetcher lives on the
+``DataSource`` instance, which Spark pickles after ``schema()`` and hands
+to every read planning of the loaded DataFrame, so ``partitions()`` and
+the partition reading page 0 reuse the parsed page. The row count, and
+page 0's rows, are therefore those seen at ``load()``, as Spark's file
+sources list their files at ``load()``.
+
+Spark's own fixed cost, outside this module: ``load()`` runs
+``schema()`` in a ``create_data_source`` Python call and each execution
+runs ``reader()``/``partitions()`` in a ``plan_data_source_read`` call.
+Both run in reused ``pyspark.daemon`` worker forks, not new processes.
+Each call, like each task, starts with pyspark's
+``importlib.invalidate_caches()``, which on Python < 3.13 re-reads every
+zip archive on the worker's ``sys.path`` (0.11-0.16 s per call on a
+4-core host); :mod:`etl_project_spark._zipcache` turns that into a stat
+check once the worker has imported this package (BASELINE.md).
 
 The browser itself is NOT reproduced — fetching is pluggable via a
 ``PageFetcher``. The default :class:`SyntheticShopFetcher` is a
@@ -32,10 +45,12 @@ range fetched sequentially (source-side politeness).
 
 from __future__ import annotations
 
+import copy
 import math
 import re
 from collections.abc import Iterator, Sequence
 from dataclasses import dataclass
+from functools import cached_property
 from html import unescape
 
 from pyspark.sql.datasource import (
@@ -70,6 +85,12 @@ class PageFetcher:
     def fetch_page(self, page: int) -> Sequence[tuple]:
         """Return the rows of one page, already extracted to strings."""
         raise NotImplementedError
+
+    def for_pages(self, first: int, last: int) -> PageFetcher:
+        """The fetcher to ship with a partition reading pages ``first``
+        to ``last``: one carrying no cached page it will not read. The
+        default, for fetchers that cache no pages, is this one."""
+        return self
 
     def refresh(self) -> None:
         """Invalidate any cached metadata (headers/total_rows).
@@ -357,17 +378,34 @@ class HtmlTableFetcher(PageFetcher):
             return resp.read().decode("utf-8", errors="replace")
 
     def _page0(self) -> dict:
-        cached = getattr(self, "_page0_doc", None)
-        if cached is None:
-            cached = parse_table_page(self._get_html(0))
-            object.__setattr__(self, "_page0_doc", cached)
-        return cached
+        """Page 0, fetched and parsed once: ``headers`` (past the
+        control columns), ``info``, ``page_size`` and ``rows``."""
+        doc = getattr(self, "_page0_doc", None)
+        if doc is None:
+            page = parse_table_page(self._get_html(0))
+            doc = {
+                "headers": page["headers"][self.skip_headers:],
+                "info": page["info"],
+                "page_size": max(1, len(page["rows"])),
+                "rows": page["rows"],
+            }
+            object.__setattr__(self, "_page0_doc", doc)
+        return doc
+
+    def for_pages(self, first: int, last: int) -> PageFetcher:
+        doc = getattr(self, "_page0_doc", None)
+        if first == 0 or doc is None:
+            return self
+        # keep page 0's metadata (fetch_page needs the header width)
+        out = copy.copy(self)
+        object.__setattr__(out, "_page0_doc", {**doc, "rows": None})
+        return out
 
     def refresh(self) -> None:
         object.__setattr__(self, "_page0_doc", None)
 
     def headers(self) -> list[str]:
-        return self._page0()["headers"][self.skip_headers:]
+        return self._page0()["headers"]
 
     def total_rows(self) -> int:
         nums = _COUNT_RE.findall(self._page0()["info"])
@@ -378,15 +416,17 @@ class HtmlTableFetcher(PageFetcher):
         return int(nums[-1].replace(".", ""))  # 1.234 → 1234 (es-AR grouping)
 
     def page_size(self) -> int:
-        return max(1, len(self._page0()["rows"]))
+        return self._page0()["page_size"]
 
     def fetch_page(self, page: int) -> Sequence[tuple]:
-        doc = self._page0() if page == 0 else parse_table_page(self._get_html(page))
+        rows = self._page0()["rows"] if page == 0 else None
+        if rows is None:
+            rows = parse_table_page(self._get_html(page))["rows"]
         width = len(self.headers())
         # The widget's 4 control columns precede the data columns in the
         # header row only; body rows carry just the data cells.
         out = []
-        for i, r in enumerate(doc["rows"]):
+        for i, r in enumerate(rows):
             if len(r) < width:
                 # A short tuple would surface pages later as an opaque
                 # arity mismatch in the Arrow reader (ADVICE r7) — name
@@ -449,12 +489,18 @@ class PaginatedTableReader(DataSourceReader):
         n_pages = max(1, math.ceil(self.fetcher.total_rows() / self.fetcher.page_size()))
         n_parts = min(self.max_concurrency, n_pages)
         pages_per_part = math.ceil(n_pages / n_parts)
-        return [
-            _PageRangePartition(
-                self.fetcher, first, min(first + pages_per_part - 1, n_pages - 1)
+        parts = []
+        for first in range(0, n_pages, pages_per_part):
+            last = min(first + pages_per_part - 1, n_pages - 1)
+            parts.append(
+                _PageRangePartition(self.fetcher.for_pages(first, last), first, last)
             )
-            for first in range(0, n_pages, pages_per_part)
-        ]
+        return parts
+
+    def __getstate__(self) -> dict:
+        # Spark pickles the reader into the read function every task
+        # gets; read() uses only each partition's own fetcher.
+        return {**self.__dict__, "fetcher": None}
 
     def read(self, partition: _PageRangePartition) -> Iterator:
         # One connection per partition, pages fetched sequentially within
@@ -516,13 +562,18 @@ class PaginatedTableDataSource(DataSource):
       endpoint contract; otherwise the synthetic fetcher is used
     - ``n_rows`` / ``rows_per_page``: synthetic fetcher sizing
     - ``max_concurrency``: partition cap (≙ SE_NODE_MAX_SESSIONS)
+
+    The fetcher is made once per instance, so the page-0 probe that
+    ``schema()`` makes at ``load()`` also serves ``reader()``: the
+    row count is the one seen at ``load()``.
     """
 
     @classmethod
     def name(cls) -> str:
         return "paginated_table"
 
-    def _fetcher(self) -> PageFetcher:
+    @cached_property
+    def fetcher(self) -> PageFetcher:
         base_url = self.options.get("base_url")
         if base_url and self.options.get("format", "json") == "html":
             return HtmlTableFetcher(
@@ -539,18 +590,21 @@ class PaginatedTableDataSource(DataSource):
 
     def schema(self) -> StructType:
         schema = StructType()
-        for h in self._fetcher().headers():
+        for h in self.fetcher.headers():
             schema = schema.add(h, "string")
         return schema
 
     def reader(self, schema: StructType) -> DataSourceReader:
+        fetcher = self.fetcher
+        # handed over: this source is pickled into the read function too
+        del self.fetcher
         return PaginatedTableReader(
-            self._fetcher(), int(self.options.get("max_concurrency", 8)), schema
+            fetcher, int(self.options.get("max_concurrency", 8)), schema
         )
 
     def simpleStreamReader(self, schema: StructType) -> PaginatedStreamReader:
         return PaginatedStreamReader(
-            self._fetcher(), int(self.options.get("pages_per_trigger", 1))
+            self.fetcher, int(self.options.get("pages_per_trigger", 1))
         )
 
 

@@ -27,17 +27,15 @@ def spark():
 @pytest.fixture(scope="session", autouse=True)
 def no_leaked_package_temp_dirs():
     """Fail the run when it leaves a new ``etl_project_spark_*`` entry in
-    the temp dir (a per-session package zip once leaked there).
+    the temp dir (a per-session package zip and per-process index
+    scratch dirs once leaked there).
 
     Set up before, torn down after the ``spark`` fixture, so the session
-    has stopped when this checks. Exempt: this process's own index
-    scratch dirs (``etl_project_spark_<kind>_<pid>``), which registered
-    indexes read for the life of the process.
+    has stopped when this checks.
     """
     pattern = os.path.join(tempfile.gettempdir(), "etl_project_spark_*")
     before = set(glob.glob(pattern))
     yield
-    own = f"_{os.getpid()}"
-    left = sorted(p for p in set(glob.glob(pattern)) - before if not p.endswith(own))
+    left = sorted(set(glob.glob(pattern)) - before)
     if left:
         pytest.fail(f"the test run left package temp dirs behind: {left}")

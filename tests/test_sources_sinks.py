@@ -61,13 +61,15 @@ def test_sentinel_mix_is_stable(spark):
 
 def _json_table_server(headers: list[str], data: list[list], page_size: int):
     """Fixture server for :class:`HttpFetcher`'s ``/meta`` +
-    ``/page/{i}`` JSON contract."""
+    ``/page/{i}`` JSON contract; ``srv.paths`` lists the requested
+    paths."""
     import http.server
     import json
     import threading
 
     class Handler(http.server.BaseHTTPRequestHandler):
         def do_GET(self):
+            self.server.paths.append(self.path)
             if self.path == "/meta":
                 body = json.dumps(
                     {"headers": headers, "total_rows": len(data), "page_size": page_size}
@@ -89,6 +91,7 @@ def _json_table_server(headers: list[str], data: list[list], page_size: int):
             pass
 
     srv = http.server.ThreadingHTTPServer(("127.0.0.1", 0), Handler)
+    srv.paths = []
     threading.Thread(target=srv.serve_forever, daemon=True).start()
     return srv
 
@@ -116,7 +119,8 @@ def _html_shop_server(n_rows: int, page_size: int):
     """Fixture server emitting the reference site's DataTables shape
     (flows/etl.py:92-183): 4 control `<th>`s before the data headers,
     a `table_id_info` line with es-AR dot-grouped thousands, and a
-    `boton_ir` locate button whose onclick carries the coordinates."""
+    `boton_ir` locate button whose onclick carries the coordinates.
+    ``srv.paths`` lists the requested paths."""
     import http.server
     import threading
     from urllib.parse import parse_qs, urlparse
@@ -139,6 +143,7 @@ def _html_shop_server(n_rows: int, page_size: int):
 
     class Handler(http.server.BaseHTTPRequestHandler):
         def do_GET(self):
+            self.server.paths.append(self.path)
             q = parse_qs(urlparse(self.path).query)
             page = int(q.get("page", ["0"])[0])
             lo, hi = page * page_size, min((page + 1) * page_size, n_rows)
@@ -164,6 +169,7 @@ def _html_shop_server(n_rows: int, page_size: int):
             pass
 
     srv = http.server.ThreadingHTTPServer(("127.0.0.1", 0), Handler)
+    srv.paths = []
     threading.Thread(target=srv.serve_forever, daemon=True).start()
     return srv
 
@@ -186,6 +192,67 @@ def test_html_fetcher_source_scrapes_fixture_site(spark):
         assert byname["Shop 0008"]["Localizar"] == "No disponible"
         assert byname["Shop 0009"]["Localizar"] == ""  # regex miss
         assert byname["Shop 1233"]["Comercio"] == "Shop 1233"  # last page partial
+    finally:
+        srv.shutdown()
+        srv.server_close()
+
+
+def test_one_page0_probe_per_load_and_execution(spark):
+    """``schema()`` at ``load()`` probes page 0 (HTML) or ``/meta``
+    (JSON) once; the read planning and the partition reading page 0
+    reuse that probe, so one load plus one execution requests every
+    page exactly once."""
+    from collections import Counter
+    from urllib.parse import parse_qs, urlparse
+
+    html = _html_shop_server(n_rows=450, page_size=100)
+    data = [[f"s{i}", f"{i}"] for i in range(45)]
+    js = _json_table_server(["name", "n"], data, page_size=10)
+    try:
+        port = html.server_address[1]
+        df = _src(
+            spark, base_url=f"http://127.0.0.1:{port}/table", format="html",
+            max_concurrency=2,
+        )
+        assert len(df.collect()) == 450
+        pages = Counter(int(parse_qs(urlparse(p).query)["page"][0]) for p in html.paths)
+        assert pages == Counter(range(5))
+
+        df = _src(spark, base_url=f"http://127.0.0.1:{js.server_address[1]}", max_concurrency=2)
+        assert sorted(tuple(r) for r in df.collect()) == sorted(map(tuple, data))
+        assert Counter(js.paths) == Counter(["/meta"] + [f"/page/{i}" for i in range(5)])
+    finally:
+        for srv in (html, js):
+            srv.shutdown()
+            srv.server_close()
+
+
+def test_partitions_carry_page0_rows_only_where_read():
+    """A partition that does not read page 0 ships without its cached
+    rows (only the header metadata it needs), and the pickled reader,
+    which Spark puts into the read function of every task, carries no
+    fetcher."""
+    import pickle
+
+    from pyspark.sql.types import StructType
+
+    from etl_project_spark.sources.paginated import HtmlTableFetcher, PaginatedTableReader
+
+    srv = _html_shop_server(n_rows=450, page_size=100)
+    try:
+        f = HtmlTableFetcher(base_url=f"http://127.0.0.1:{srv.server_address[1]}/table")
+        schema = StructType()
+        for h in f.headers():
+            schema = schema.add(h, "string")
+        reader = PaginatedTableReader(f, 2, schema)
+        first, second = reader.partitions()
+        assert (first.first_page, second.first_page) == (0, 3)
+        assert first.fetcher._page0_doc["rows"] is not None
+        assert second.fetcher._page0_doc["rows"] is None
+        assert second.fetcher.headers() == f.headers()
+        assert pickle.loads(pickle.dumps(reader)).fetcher is None
+        assert [r[0] for r in second.fetcher.fetch_page(3)][:1] == ["Shop 0300"]
+        assert len(srv.paths) == 2  # page 0 once, then page 3
     finally:
         srv.shutdown()
         srv.server_close()
