@@ -317,7 +317,6 @@ def main() -> None:
         "steady_total": detail["steady_state"]["value"],
         "calib_numpy_s": detail["host_calib"]["numpy_matmul_s"],
         "calib_start": calib_start["numpy_matmul_s"],
-        "calib_end": detail["host_calib"]["numpy_matmul_s"],
         "sf": detail["sf"],
     }
     line = json.dumps(compact, separators=(",", ":"))

@@ -14,7 +14,7 @@ Design for 100 TB (SURVEY.md §7.2 step 6):
   ~10µs/element — while explode + xxhash64 + hash-aggregate stay inside
   whole-stage codegen (~50ns/element, measured 100×+ faster here).
   HOFs are kept only for per-document work that is O(1)-ish per row
-  (band slicing, final fingerprint assembly).
+  (final fingerprint assembly).
 
 MinHash/LSH banding follows the standard scheme (Broder 1997; Leskovec
 et al., "Mining of Massive Datasets" ch. 3): a document's signature is
@@ -339,38 +339,39 @@ def dedup_clusters(df: DataFrame, id_col: str, key: Column) -> DataFrame:
 
 # -- MinHash + LSH ---------------------------------------------------------
 
-def band_hashes(sig_col: Column, bands: int, rows_per_band: int) -> Column:
-    """Hash each band of the signature → array<bigint> of length ``bands``.
+def band_hashes(bands: int, rows_per_band: int) -> Column:
+    """Hash each band of the ``_h0.._h{n-1}`` signature columns →
+    array<bigint> of length ``bands``.
 
-    ``xxhash64`` hashes the sliced array directly (it supports complex
-    types); band index rides along so equal slices in different bands
-    don't collide.
+    One flat ``array(xxhash64(_h0, _h1, 0), …)`` expression: xxhash64
+    over several arguments chains each value's hash into the next
+    one's seed, exactly as it walks the elements of an array, so band
+    ``b`` is bit-identical to ``xxhash64(slice(sig, b·r+1, r), b)``
+    (pinned in tests/test_dedup.py) without a lambda, which Spark
+    would interpret instead of compiling. The band index rides along
+    so equal slices in different bands don't collide.
     """
-    return F.transform(
-        F.sequence(F.lit(0), F.lit(bands - 1)),
-        lambda b: F.xxhash64(F.slice(sig_col, b * rows_per_band + 1, rows_per_band), b),
+    members = ", ".join(
+        "xxhash64("
+        + ", ".join(f"_h{b * rows_per_band + j}" for j in range(rows_per_band))
+        + f", {b})"
+        for b in range(bands)
     )
+    return F.expr(f"array({members})")
 
 
-def minhash_sig_rows(
+def minhash_gram_rows(
     df: DataFrame,
     id_col: str,
     text_col: str,
     *,
-    n_hashes: int = 64,
     shingle_k: int = 5,
     use_token_ngrams: bool = False,
-) -> tuple[DataFrame, DataFrame]:
-    """The MinHash SIGNING pass, factored out so it can be paid once:
-    ``(sig, rows)`` where ``sig`` is one row per doc with the
-    ``n_hashes`` min-hash members (``_id, _h0.._h{n-1}``) and ``rows``
-    is the hashed gram inverted index (``_id, _gram`` int64, duplicates
-    preserved). Pure function of (corpus, n_hashes, shingle_k,
-    use_token_ngrams) — the persisted MinHash index
-    (:mod:`etl_project_spark.sources.dedup_index`) writes exactly these
-    frames, so served and inflight runs are definitionally identical.
-    See :func:`minhash_near_dup_pairs` for the shape/codegen notes.
-    """
+) -> DataFrame:
+    """The hashed gram rows ``(_id, _gram)`` (int64, duplicates
+    preserved) every MinHash frame is aggregated from, keyed by
+    ``_id``. See :func:`minhash_near_dup_pairs` for the shape/codegen
+    notes."""
     rows = (
         ngram_rows(df, id_col, text_col, n=shingle_k)
         if use_token_ngrams
@@ -389,31 +390,100 @@ def minhash_sig_rows(
     # consumer in pair_jaccard). Measured r17 (interleaved sf0.1
     # A/B with the cache materialization below): inflight pairs
     # ~3.5 → ~2.4 s steady, plan 8 → 2 executed exchanges.
-    rows = rows.repartition("_id")
+    return rows.repartition("_id")
+
+
+def minhash_sig_rows(
+    df: DataFrame,
+    id_col: str,
+    text_col: str,
+    *,
+    n_hashes: int = 64,
+    shingle_k: int = 5,
+    use_token_ngrams: bool = False,
+) -> tuple[DataFrame, DataFrame]:
+    """The inflight MinHash SIGNING pass: ``(sig, rows)`` where ``sig``
+    is one row per doc with the ``n_hashes`` min-hash members
+    (``_id, _h0.._h{n-1}``) and ``rows`` is :func:`minhash_gram_rows`.
+    Pure function of (corpus, n_hashes, shingle_k, use_token_ngrams);
+    the persisted MinHash index
+    (:mod:`etl_project_spark.sources.dedup_index`) aggregates the same
+    rows with :func:`minhash_doc_frame`, so served and inflight
+    signatures are definitionally identical.
+    """
+    rows = minhash_gram_rows(
+        df, id_col, text_col, shingle_k=shingle_k, use_token_ngrams=use_token_ngrams
+    )
     return minhash_sig_from_rows(rows, n_hashes=n_hashes), rows
 
 
-def minhash_sig_from_rows(rows: DataFrame, *, n_hashes: int = 64) -> DataFrame:
-    """The signature aggregation over hashed-gram rows, factored out so
-    the index APPEND path can derive the batch signature frame FROM the
-    already-persisted distinct gram rows (one batch scan, not two).
-    ``min`` is duplicate-insensitive, so the signature over distinct
-    ``(_id, _gram)`` rows is bit-identical to one over raw rows — the
-    append-equals-rebuild test in tests/test_dedup_index.py pins this.
-    """
+def _minhash_members(n_hashes: int) -> str:
     # One SQL-parsed struct expression instead of n_hashes×4 py4j column
     # calls: building 64 F.min(F.xxhash64(...)).alias(...) trees cost
     # ~0.45 s of driver-side py4j chatter PER PLAN BUILD (measured r17;
     # paid by every query in the minhash family, every bench pass); the
     # single-expr form is 0.11 s with a bit-identical aggregate
     # (xxhash64(_gram, j) in SQL is the same multi-arg hash).
-    members = ", ".join(
-        f"min(xxhash64(_gram, {j})) AS _h{j}" for j in range(n_hashes)
-    )
+    return ", ".join(f"min(xxhash64(_gram, {j})) AS _h{j}" for j in range(n_hashes))
+
+
+def minhash_sig_from_rows(rows: DataFrame, *, n_hashes: int = 64) -> DataFrame:
+    """The signature aggregation over hashed-gram rows ``(_id, _gram)``.
+    ``min`` is duplicate-insensitive, so the signature over distinct
+    rows is bit-identical to one over raw rows."""
     return (
         rows.groupBy("_id")
-        .agg(F.expr(f"struct({members}) AS _s"))
+        .agg(F.expr(f"struct({_minhash_members(n_hashes)}) AS _s"))
         .select("_id", "_s.*")
+    )
+
+
+def minhash_doc_frame(rows: DataFrame, *, n_hashes: int = 64) -> DataFrame:
+    """The persisted MinHash index's one per-document frame
+    ``(_id, _h0.._h{n-1}, _g)`` from hashed-gram rows: the
+    :func:`minhash_sig_from_rows` signature plus ``_g``, the document's
+    sorted distinct gram-hash set (``array<bigint>``) that the
+    gram-set verify (:func:`gram_set_jaccard`) intersects. Both come
+    from the same ``groupBy(_id)``; the sort makes the frame a pure
+    function of the document, whatever order its rows arrive in.
+    """
+    return (
+        rows.groupBy("_id")
+        .agg(
+            F.expr(
+                f"struct({_minhash_members(n_hashes)}, "
+                "array_sort(collect_set(_gram)) AS _g) AS _s"
+            )
+        )
+        .select("_id", "_s.*")
+    )
+
+
+def gram_set_jaccard(candidates: DataFrame, frame: DataFrame) -> DataFrame:
+    """Exact Jaccard for candidate ``(id_a, id_b)`` pairs from per-doc
+    distinct gram sets ``(_id, _g)``: one join per pair side and
+    ``size(array_intersect)`` over the two sets, rounded as
+    :func:`pair_jaccard` rounds. The set form of :func:`pair_jaccard`
+    (same values), without its per-gram joins and aggregates.
+    """
+    ga = frame.select(F.col("_id").alias("id_a"), F.col("_g").alias("_ga"))
+    gb = frame.select(F.col("_id").alias("id_b"), F.col("_g").alias("_gb"))
+    return (
+        candidates.join(ga, "id_a")
+        .join(gb, "id_b")
+        .select(
+            "id_a",
+            "id_b",
+            F.size(F.array_intersect("_ga", "_gb")).alias("_inter"),
+            (F.size("_ga") + F.size("_gb")).alias("_sz"),
+        )
+        .select(
+            "id_a",
+            "id_b",
+            F.round(F.col("_inter") / (F.col("_sz") - F.col("_inter")), 4).alias(
+                "jaccard_sim"
+            ),
+        )
     )
 
 
@@ -428,7 +498,7 @@ def minhash_near_dup_pairs(
     threshold: float = 0.5,
     use_token_ngrams: bool = False,
     prefilter: bool = True,
-    signed: tuple[DataFrame, DataFrame] | None = None,
+    signed: DataFrame | None = None,
     probe_ids: DataFrame | None = None,
 ) -> DataFrame:
     """Near-duplicate pairs via MinHash-LSH with exact Jaccard verify.
@@ -448,11 +518,18 @@ def minhash_near_dup_pairs(
     agreement-estimator prefilter is skipped in probe mode — candidate
     mass is already batch-bounded, which is the prefilter's job.
 
+    ``signed`` is the persisted MinHash index's per-document frame
+    ``(_id, _h0.._h{n-1}, _g)`` (:func:`minhash_doc_frame`, read by
+    ``sources.dedup_index.load_minhash_index``): the signing pass is
+    skipped, and candidates are verified against the stored gram sets
+    (:func:`gram_set_jaccard`). Without it the text is signed inflight
+    and verified with the row-form :func:`pair_jaccard`.
+
     Scale shape (all whole-stage-codegen, no lambda HOFs in the hot
     path): shingle explode → 64 flat ``min(xxhash64(gram, j))``
     aggregates per doc (map-side partial combine collapses to one row
-    per doc before the shuffle) → per-doc band hashing (16 cheap array
-    slices) → band explode (long+id rows only) → self-equi-join on
+    per doc before the shuffle) → per-doc band hashing (one flat
+    ``xxhash64`` per band) → band explode (long+id rows only) → self-equi-join on
     (band_idx, band_hash) → **signature-agreement prefilter** (the
     fraction of equal minhash components is an unbiased Jaccard
     estimator; a flat 64-term comparison, two narrow sig joins) →
@@ -470,6 +547,8 @@ def minhash_near_dup_pairs(
     recall while cutting verify input by ~100×.
     """
     from pyspark import StorageLevel
+
+    from etl_project_spark.session import scoped_persist
 
     if probe_ids is not None and prefilter:
         # Part of the API contract, not just prose (ADVICE r16): the
@@ -521,8 +600,6 @@ def minhash_near_dup_pairs(
         # recompute). sig is tiny (n_docs × 64 longs). Tracked for
         # harness-side release (session.release_persists) — a builder
         # can't unpersist caches its caller's action still needs.
-        from etl_project_spark.session import scoped_persist
-
         sig = scoped_persist(sig, StorageLevel.MEMORY_AND_DISK)
         # r18 (VERDICT r17 #3, the cold one-shot): the gram rows are
         # NOT persisted and nothing is eagerly counted. All four rows
@@ -540,37 +617,23 @@ def minhash_near_dup_pairs(
     else:
         # Served from the persisted MinHash index: the signing pass
         # (shingle explode + 64-way min agg — the dominant cost) was
-        # paid at persist time; the parquet frames re-read cheaply per
+        # paid at persist time; the parquet frame re-reads cheaply per
         # branch, so no session cache is taken out here.
-        sig, rows = signed
-    sig_arr = F.expr("array(" + ", ".join(f"_h{j}" for j in range(n_hashes)) + ")")
-    banded = sig.select(
-        "_id",
-        F.posexplode(band_hashes(sig_arr, bands, rows_per_band)).alias(
-            "_band_idx", "_band_hash"
-        ),
-    )
+        sig, rows = signed, None
+    bh = band_hashes(bands, rows_per_band)
+    banded = sig.select("_id", F.posexplode(bh).alias("_band_idx", "_band_hash"))
     if probe_ids is not None:
         # Probe-restricted candidates: only the (small) probe side's
-        # banded rows enter the left of the band join — a semi-join
-        # Spark broadcasts — and the inequality is != (not <) because
-        # the probe member may be either side of the ordered pair;
-        # least/greatest re-normalizes and distinct() collapses the
-        # probe-probe pairs seen from both orientations.
-        # r18 (VERDICT r17 #9): the semi-join lands on the SIGNATURE
-        # frame BELOW the band explode, not on the banded rows above
-        # it — identical set (the join key _id is untouched by the
-        # explode), but the probe side's grown-index scan now carries
-        # the broadcast semi-join directly and only probe docs pay the
-        # bands-per-doc explode (32× fewer rows through the filter).
+        # banded rows enter the left of the band join, and the
+        # inequality is != (not <) because the probe member may be
+        # either side of the ordered pair; least/greatest re-normalizes
+        # and distinct() collapses the probe-probe pairs seen from both
+        # orientations. The semi-join lands on the signature frame
+        # BELOW the band explode (r18), so only probe docs pay the
+        # bands-per-doc explode.
         left = (
             sig.join(probe_ids.select("_id"), "_id", "left_semi")
-            .select(
-                "_id",
-                F.posexplode(
-                    band_hashes(sig_arr, bands, rows_per_band)
-                ).alias("_band_idx", "_band_hash"),
-            )
+            .select("_id", F.posexplode(bh).alias("_band_idx", "_band_hash"))
             .alias("l")
         )
         right = banded.alias("r")
@@ -587,61 +650,29 @@ def minhash_near_dup_pairs(
             )
             .distinct()
         )
-        # Verify-side restriction (round-16 verdict #7): the exact
-        # verify only ever looks at docs that appear in some candidate
-        # pair, so the gram frame is semi-joined to the candidate id
-        # set BEFORE the distinct — a production probe must not build
-        # distinct grams for the whole corpus when the candidate set
-        # is batch-bounded. Both small frames are persisted: candidates
-        # feeds pair_jaccard plus the semi-join under each of the gram
-        # frame's three consumers (sizes, ga, gb — 4 occurrences would
-        # re-run the band join), and caching the restricted gram rows
-        # collapses those three full index-parquet scans into one.
-        # r18: the distinct_grams persist is GONE — with the index's
-        # gram rows now a bucketed table, the three pair_jaccard
-        # consumers re-read an already-clustered scan (zero exchanges,
-        # no cache job), where the old PENDING cache reported unknown
-        # partitioning and handed each consumer a re-shuffle (3
-        # hash(_id) exchanges in the before-plan). candidates stays
-        # persisted (no eager count): it truncates the band-join
-        # lineage for its four consumers, and pending-ness costs
-        # nothing here — pair_jaccard broadcasts it and cand_ids
-        # re-aggregates it, neither needs its partitioning.
-        # Interleaved A/B vs both-persists: runtime-neutral
-        # (7.09 vs 7.06 on a throttled window); the committed plan
-        # sheds the gram cache-build job from the driver's cold
-        # one-shot.
-        from etl_project_spark.session import scoped_persist
-
+        # No join here carries a broadcast hint: the probe's size is the
+        # caller's promise, not something the plan knows, so the
+        # planner and AQE pick each join from the sizes they see (the
+        # batch-sized candidate side broadcasts at run time).
+        if rows is None:
+            return gram_set_jaccard(candidates, signed).filter(
+                F.col("jaccard_sim") >= threshold
+            )
+        # Inflight verify-side restriction (round-16 verdict #7): the
+        # exact verify only ever looks at docs in some candidate pair,
+        # so the gram rows are semi-joined to the candidate id set
+        # before the distinct. Both small frames are persisted:
+        # candidates feeds pair_jaccard plus the semi-join under each of
+        # the gram frame's three consumers (sizes, ga, gb), and caching
+        # the restricted gram rows collapses their three re-reads.
         candidates = scoped_persist(candidates, StorageLevel.MEMORY_AND_DISK)
         cand_ids = (
             candidates.select(F.col("id_a").alias("_id"))
             .unionByName(candidates.select(F.col("id_b").alias("_id")))
             .distinct()
         )
-        # Explicit broadcast, deliberately (guide §3.1): cand_ids is
-        # BATCH-bounded (ids appearing in some probe candidate pair —
-        # the operator's contract is batch ≪ corpus, and pair_jaccard
-        # already broadcasts the candidates frame itself), so the hint
-        # is size-safe at any corpus scale. It is also necessary: the
-        # bucketed gram scan satisfies the join's distribution, so
-        # without the hint the planner picks a zero-exchange
-        # SortMergeJoin that SORTS the full gram table once per
-        # verify consumer — and with no shuffle boundary AQE never
-        # gets runtime sizes to rewrite it (sf1 A/B: 13.2 s with the
-        # SMJ form vs 11.5 s broadcast).
-        # The restricted gram set stays PERSISTED (unlike the
-        # full-sweep branch below, which dropped its persist in r18):
-        # with the bucketed index there is no exchange under this
-        # dedup, hence no shuffle-reuse point — unpersisted, each of
-        # the three pair_jaccard consumers re-scanned and re-deduped
-        # the full gram table (sf1 phase profile: probe 8.2 → 10.2 s).
-        # The cache is batch-bounded, and its build is exchange-free
-        # off the bucketed scan.
         distinct_grams = scoped_persist(
-            rows.join(F.broadcast(cand_ids), "_id", "left_semi").dropDuplicates(
-                ["_id", "_gram"]
-            ),
+            rows.join(cand_ids, "_id", "left_semi").dropDuplicates(["_id", "_gram"]),
             StorageLevel.MEMORY_AND_DISK,
         )
         return pair_jaccard(candidates, distinct_grams).filter(
@@ -696,15 +727,10 @@ def minhash_near_dup_pairs(
             .select("id_a", "id_b")
         )
 
-    # Served mode examined r17, left alone: the three pair_jaccard
-    # consumers re-read the index parquet and re-shuffle it for their
-    # own dropDuplicates, and keying+persisting+materializing the
-    # distinct grams once LOOKED like a 3-passes-to-1 win — but
-    # measured SLOWER (interleaved reps ~2.4 s parquet re-reads vs
-    # ~3.0 s cached at sf0.1): columnar re-reads of an already-distinct
-    # index are cheaper than a cache materialization job, the same
-    # trade the r16 append path measured (read-back beat persist,
-    # sources/dedup_index.py).
+    if rows is None:
+        return gram_set_jaccard(candidates, signed).filter(
+            F.col("jaccard_sim") >= threshold
+        )
     distinct_grams = rows.dropDuplicates(["_id", "_gram"])
     return pair_jaccard(candidates, distinct_grams).filter(
         F.col("jaccard_sim") >= threshold

@@ -211,7 +211,7 @@ def q_minhash_near_dup_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
     d = _t(spark, sf_dir, "documents")
     # Serving amortization (round-14, the gram/SimHash index
     # precedent): a session that has run ``persist_minhash_index``
-    # answers repeat sweeps from the persisted signature + gram frames
+    # answers repeat sweeps from the persisted per-document frame
     # and skips the signing pass entirely. No registration (the
     # driver's correctness runs) → the self-contained inflight path.
     idx = minhash_index_for(sf_dir, n_hashes=64, shingle_k=3, use_token_ngrams=True)
@@ -230,8 +230,8 @@ def q_minhash_near_dup_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
 def q_minhash_indexed_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
     """MinHash near-dup pairs served from a MATERIALIZED signing index
     — the q_knn_ivf_indexed_topk pattern applied to dedup (round-14
-    verdict #3): build (or rebuild) the persisted signature + distinct
-    hashed-gram parquet frames with ``persist_minhash_index``, then
+    verdict #3): build (or rebuild) the persisted per-document
+    signature + gram-set parquet frame with ``persist_minhash_index``, then
     answer the SAME banding + exact-verify query from them via
     ``signed=``, skipping the shingle explode and the 64-way min
     aggregation entirely — the dominant cost of the inflight query
@@ -288,7 +288,7 @@ def q_minhash_index_append_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
     persisted index is built over the HISTORY corpus only (every
     source except the arriving batch, the ``src19`` incremental
     convention), the batch is then signed IN ISOLATION and APPENDED
-    into the signature + distinct-gram parquet
+    into the per-document index parquet
     (``append_minhash_index``), and the banding + exact-verify probe
     runs against the grown index.
 
@@ -298,7 +298,7 @@ def q_minhash_index_append_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
     rebuild form pays per run. The grown index is bit-identical to a
     whole-corpus rebuild (signatures are per-document pure functions
     of text and doc_id is unique corpus-wide — see
-    ``batch_minhash_frames``), so this query returns EXACTLY the
+    ``batch_minhash_frame``), so this query returns EXACTLY the
     whole-corpus pair set and shares ``q_minhash_near_dup_pairs``'s
     oracle verbatim. The signs-only-the-batch property (the append
     job's one documents scan carries the pushed ``source = src19``

@@ -254,7 +254,7 @@ def stream_minhash_index_append(arriving: DataFrame, idx, *, checkpoint: str):
     distinct-gram sets are complete within the micro-batch that
     carries the row, and appends over disjoint doc sets compose to
     exactly the whole-batch append (same per-doc purity argument as
-    ``batch_minhash_frames``). No watermark, no state store; the only
+    ``batch_minhash_frame``). No watermark, no state store; the only
     stateful thing is the source's file-position checkpoint.
 
     Exactly-once seam, stated plainly: plain parquet append has no

@@ -686,6 +686,65 @@ def test_minhash_probe_restriction_equals_filtered_full(spark, docs):
     assert expected and len(expected) < len(full)
 
 
+@pytest.mark.parametrize("bands,rows_per_band", [(32, 2), (16, 4), (8, 8)])
+def test_band_hashes_flat_equals_slice_lambda(spark, bands, rows_per_band):
+    """The flat ``xxhash64(_h0, _h1, b)`` band expression is
+    bit-identical to hashing each signature slice with its band index
+    (the interpreted ``transform`` lambda form it replaced)."""
+    n = bands * rows_per_band
+    sig = spark.range(3000).selectExpr(
+        "id AS _id", *[f"xxhash64(id, {j}) AS _h{j}" for j in range(n)]
+    )
+    arr = F.expr("array(" + ", ".join(f"_h{j}" for j in range(n)) + ")")
+    lam = F.transform(
+        F.sequence(F.lit(0), F.lit(bands - 1)),
+        lambda b: F.xxhash64(F.slice(arr, b * rows_per_band + 1, rows_per_band), b),
+    )
+    out = sig.select(
+        DD.band_hashes(bands, rows_per_band).alias("flat"), lam.alias("lam")
+    )
+    assert out.filter(F.col("flat") != F.col("lam")).count() == 0
+    assert out.count() == 3000
+
+
+def _hinted(df) -> bool:
+    return "strategy=broadcast" in df._jdf.queryExecution().optimizedPlan().toString()
+
+
+def test_minhash_probe_forces_no_broadcast(spark, docs, tmp_path):
+    """The probe's size is only the caller's promise, so no probe plan
+    may carry a broadcast hint: a corpus-sized probe (every doc) gets
+    none, served or inflight. A batch-sized (in-contract) probe still
+    ends in a broadcast join, picked by the planner/AQE from the sizes
+    it sees."""
+    from etl_project_spark.sources import dedup_index as DX
+
+    kw = dict(
+        n_hashes=64, bands=32, shingle_k=3, threshold=0.5,
+        use_token_ngrams=True, prefilter=False,
+    )
+    idx = DX.persist_minhash_index(
+        spark, SF_ORACLE, path=str(tmp_path / "idx"), register=False, docs=docs
+    )
+    every = docs.select(F.col("doc_id").alias("_id"))
+    batch = docs.filter(F.col("source") == "src0").select(F.col("doc_id").alias("_id"))
+    # positive anchor: a hint shows in this plan string
+    assert _hinted(docs.join(F.broadcast(every), F.col("doc_id") == F.col("_id")))
+    for signed in (DX.load_minhash_index(spark, idx), None):
+        assert not _hinted(
+            DD.minhash_near_dup_pairs(
+                docs, "doc_id", "text", signed=signed, probe_ids=every, **kw
+            )
+        )
+    pairs = DD.minhash_near_dup_pairs(
+        docs, "doc_id", "text", signed=DX.load_minhash_index(spark, idx),
+        probe_ids=batch, **kw,
+    )
+    assert not _hinted(pairs)
+    assert pairs.collect()
+    assert "BroadcastHashJoin" in pairs._jdf.queryExecution().executedPlan().toString()
+
+
 def test_probe_ids_with_prefilter_raises(spark):
     """probe_ids + prefilter is an API-contract error (ADVICE r16),
     not a silently different plan shape."""

@@ -345,11 +345,9 @@ def test_nkey_indexed_query_matches_inflight(spark, tmp_path):
 def test_minhash_append_grown_equals_rebuild(spark, tmp_path):
     """The incremental-maintenance invariant (round-16): a history-only
     index grown by ``append_minhash_index`` over the arriving batch is
-    FRAME-IDENTICAL to a whole-corpus rebuild — same signature rows,
-    same distinct gram rows — so every ``signed=`` consumer is
-    oblivious to how the index was built. Also pins the
-    sig-from-distinct-rows equivalence ``minhash_sig_from_rows``'s
-    docstring claims (min is duplicate-insensitive)."""
+    FRAME-IDENTICAL to a whole-corpus rebuild — same signatures, same
+    gram sets — so every ``signed=`` consumer is oblivious to how the
+    index was built."""
     DX.clear_dedup_indexes()
     grown = DX.persist_minhash_index(
         spark, SF_ORACLE, path=str(tmp_path / "hist"), register=False,
@@ -359,15 +357,81 @@ def test_minhash_append_grown_equals_rebuild(spark, tmp_path):
     full = DX.persist_minhash_index(
         spark, SF_ORACLE, path=str(tmp_path / "full"), register=False
     )
-    gsig, grows = DX.load_minhash_index(spark, grown)
-    fsig, frows = DX.load_minhash_index(spark, full)
-    assert sorted(tuple(r) for r in gsig.collect()) == sorted(
-        tuple(r) for r in fsig.collect()
+    grown_rows = _frame_sorted(spark, grown)
+    assert grown_rows == _frame_sorted(spark, full) and grown_rows
+
+
+def test_minhash_frame_is_signature_plus_gram_set(spark, tmp_path):
+    """The index frame's ``_h*`` columns are bit-identical to the
+    inflight signature (``minhash_sig_from_rows`` over
+    ``minhash_sig_rows``' rows) and ``_g`` is exactly each document's
+    distinct gram-row set, sorted."""
+    from etl_project_spark.catalog import read_table
+    from etl_project_spark.operators.dedup import minhash_sig_rows
+
+    docs = read_table(spark, SF_ORACLE, "documents")
+    idx = DX.persist_minhash_index(
+        spark, SF_ORACLE, path=str(tmp_path / "idx"), register=False, docs=docs
     )
-    assert sorted(tuple(r) for r in grows.collect()) == sorted(
-        tuple(r) for r in frows.collect()
+    frame = {r["_id"]: r for r in DX.load_minhash_index(spark, idx).collect()}
+    sig, rows = minhash_sig_rows(
+        docs, "doc_id", "text", n_hashes=64, shingle_k=3, use_token_ngrams=True
     )
-    assert gsig.count() > 0
+    sigs = {r["_id"]: tuple(r)[1:] for r in sig.collect()}
+    grams: dict[int, set] = {}
+    for r in rows.collect():
+        grams.setdefault(r["_id"], set()).add(r["_gram"])
+    assert frame and set(frame) == set(sigs) == set(grams)
+    for i, r in frame.items():
+        assert tuple(r[f"_h{j}"] for j in range(64)) == sigs[i]
+        assert r["_g"] == sorted(grams[i])
+
+
+def test_minhash_failed_append_leaves_index_unchanged(spark, tmp_path):
+    """An append is one write: a batch that raises on the executor
+    (``raise_error`` on one id) commits nothing, so the index keeps its
+    pre-append rows and the next probe still answers from it."""
+    from pyspark.sql import functions as F
+
+    from etl_project_spark.catalog import read_table
+    from etl_project_spark.operators.dedup import minhash_near_dup_pairs
+
+    d = read_table(spark, SF_ORACLE, "documents")
+    idx = DX.persist_minhash_index(
+        spark, SF_ORACLE, path=str(tmp_path / "hist"), register=False,
+        docs=DX._history_docs(spark, SF_ORACLE),
+    )
+    before = _frame_sorted(spark, idx)
+    batch = d.filter(F.col("source") == DX.BATCH_SOURCE)
+    bad_id = batch.agg(F.max("doc_id")).first()[0]
+    poisoned = batch.withColumn(
+        "text",
+        F.when(F.col("doc_id") == bad_id, F.raise_error(F.lit("poisoned batch")))
+        .otherwise(F.col("text")),
+    )
+    with pytest.raises(Exception, match="poisoned batch"):
+        DX.append_minhash_frames(idx, poisoned)
+    assert _frame_sorted(spark, idx) == before
+
+    history = d.filter(F.col("source") != DX.BATCH_SOURCE)
+    probe = history.filter(F.col("doc_id") % 3 == 0).select(
+        F.col("doc_id").alias("_id")
+    )
+    kw = dict(
+        n_hashes=64, bands=32, shingle_k=3, threshold=0.5,
+        use_token_ngrams=True, prefilter=False, probe_ids=probe,
+    )
+    served = sorted(
+        tuple(r)
+        for r in minhash_near_dup_pairs(
+            history, "doc_id", "text", signed=DX.load_minhash_index(spark, idx), **kw
+        ).collect()
+    )
+    inflight = sorted(
+        tuple(r)
+        for r in minhash_near_dup_pairs(history, "doc_id", "text", **kw).collect()
+    )
+    assert served == inflight and served
 
 
 def test_minhash_append_signs_only_batch(spark, tmp_path):
@@ -377,15 +441,13 @@ def test_minhash_append_signs_only_batch(spark, tmp_path):
     anchor (the pushed EqualTo must APPEAR) guards the negative
     single-scan check against plan-format drift (ADVICE r15)."""
     idx = DX.MinHashIndex(
-        str(tmp_path / "sig"), str(tmp_path / "rows"),
-        n_hashes=64, shingle_k=3, use_token_ngrams=True,
+        str(tmp_path / "idx"), n_hashes=64, shingle_k=3, use_token_ngrams=True,
     )
-    sig, rows = DX.batch_minhash_frames(spark, SF_ORACLE, idx)
-    for df in (sig, rows):
-        plan = df._jdf.queryExecution().executedPlan().toString()
-        assert "EqualTo(source,src19)" in plan  # batch filter is pushed
-        assert plan.count("FileScan") == 1  # one scan: no history side
-        assert "text" in plan  # that scan is the documents text scan
+    frame = DX.batch_minhash_frame(spark, SF_ORACLE, idx)
+    plan = frame._jdf.queryExecution().executedPlan().toString()
+    assert "EqualTo(source,src19)" in plan  # batch filter is pushed
+    assert plan.count("FileScan") == 1  # one scan: no history side
+    assert "text" in plan  # that scan is the documents text scan
 
 
 def test_minhash_append_query_matches_inflight(spark):
@@ -476,14 +538,7 @@ def test_stream_minhash_index_append_equals_batch_append(spark, tmp_path):
     full = DX.persist_minhash_index(
         spark, SF_ORACLE, path=str(tmp_path / "full"), register=False
     )
-    gsig, grows = DX.load_minhash_index(spark, grown)
-    fsig, frows = DX.load_minhash_index(spark, full)
-    assert sorted(tuple(r) for r in gsig.collect()) == sorted(
-        tuple(r) for r in fsig.collect()
-    )
-    assert sorted(tuple(r) for r in grows.collect()) == sorted(
-        tuple(r) for r in frows.collect()
-    )
+    assert _frame_sorted(spark, grown) == _frame_sorted(spark, full)
 
 
 def test_nkey_append_query_matches_inflight(spark):
@@ -554,12 +609,8 @@ def _tomb_ids(spark):
     ).select(F.col("doc_id").alias("_id"))
 
 
-def _frames_sorted(spark, idx):
-    sig, rows = DX.load_minhash_index(spark, idx)
-    return (
-        sorted(tuple(r) for r in sig.collect()),
-        sorted(tuple(r) for r in rows.collect()),
-    )
+def _frame_sorted(spark, idx):
+    return sorted(tuple(r) for r in DX.load_minhash_index(spark, idx).collect())
 
 
 def test_minhash_delete_shrunk_equals_rebuild_minus_tombstones(spark, tmp_path):
@@ -579,7 +630,7 @@ def test_minhash_delete_shrunk_equals_rebuild_minus_tombstones(spark, tmp_path):
         docs=DX._history_docs(spark, SF_ORACLE),
     )
     DX.append_minhash_index(spark, SF_ORACLE, grown)
-    before_sig, _ = _frames_sorted(spark, grown)
+    before = _frame_sorted(spark, grown)
     DX.delete_from_minhash_index(spark, grown, tomb)
 
     alive = read_table(spark, SF_ORACLE, "documents").join(
@@ -589,10 +640,9 @@ def test_minhash_delete_shrunk_equals_rebuild_minus_tombstones(spark, tmp_path):
         spark, SF_ORACLE, path=str(tmp_path / "alive"), register=False,
         docs=alive,
     )
-    gsig, grows = _frames_sorted(spark, grown)
-    rsig, rrows = _frames_sorted(spark, rebuilt)
-    assert gsig == rsig and grows == rrows
-    assert gsig and len(gsig) < len(before_sig)  # delete shrank the index
+    shrunk = _frame_sorted(spark, grown)
+    assert shrunk == _frame_sorted(spark, rebuilt)
+    assert shrunk and len(shrunk) < len(before)  # delete shrank the index
 
 
 def test_minhash_delete_rewrites_only_affected_files(spark, tmp_path):
@@ -613,17 +663,17 @@ def test_minhash_delete_rewrites_only_affected_files(spark, tmp_path):
         spark, SF_ORACLE, path=str(tmp_path / "hist"), register=False,
         docs=DX._history_docs(spark, SF_ORACLE),
     )
-    hist_files = local_files(grown.rows_path)
+    hist_files = local_files(grown.path)
     DX.append_minhash_index(spark, SF_ORACLE, grown)
     tomb = _tomb_ids(spark)
-    affected = DX._affected_index_files(spark, grown.rows_path, tomb)
+    affected = DX._affected_index_files(spark, grown, tomb)
     affected_names = {
         os.path.basename(urllib.parse.urlparse(f).path) for f in affected
     }
     # tombstones are batch-only ⇒ no history part-file is affected
     assert affected_names and affected_names.isdisjoint(hist_files)
     DX.delete_from_minhash_index(spark, grown, tomb)
-    after = local_files(grown.rows_path)
+    after = local_files(grown.path)
     assert hist_files <= after          # history files untouched
     assert affected_names.isdisjoint(after)  # affected files rewritten away
 
@@ -642,20 +692,18 @@ def test_minhash_delete_plans_never_read_text(spark, tmp_path):
     DX.append_minhash_index(spark, SF_ORACLE, grown)
     tomb = _tomb_ids(spark)
 
-    probe = DX._affected_files_frame(spark, grown.rows_path, tomb)
+    probe = DX._affected_files_frame(spark, grown, tomb)
     plan = probe._jdf.queryExecution().executedPlan().toString()
     # the index side prunes all the way to the bare id column — the
-    # _gram payload never leaves the parquet footer
+    # signature and gram-set payload never leave the parquet footer
     assert "struct<_id:bigint>" in plan
     assert "input_file_name" in plan                  # file-granularity probe
     assert "text" not in plan
 
-    affected = DX._affected_index_files(spark, grown.rows_path, tomb)
-    survivors = spark.read.parquet(*affected).join(
-        tomb.select("_id"), "_id", "left_anti"
-    )
+    affected = DX._affected_index_files(spark, grown, tomb)
+    survivors = DX._survivors_frame(spark, grown, affected, tomb)
     plan = survivors._jdf.queryExecution().executedPlan().toString()
-    assert "_gram" in plan and "doc_id" in plan
+    assert "_h0:bigint" in plan and "doc_id" in plan  # payload is read
     assert "text" not in plan
 
 
@@ -722,9 +770,9 @@ def test_minhash_delete_query_nonvacuous(spark):
 
 def test_minhash_compact_preserves_frames_and_shrinks_files(spark, tmp_path):
     """Compaction (round-17): after build + append + delete the index
-    dirs hold one file set per cycle; compact_minhash_index must fold
-    them into <= target_files per frame while leaving the LOADED
-    frames row-identical — compacted ≡ grown, pinned."""
+    dir holds one file set per cycle; compact_minhash_index must fold
+    them into <= target_files while leaving the LOADED frame
+    row-identical — compacted ≡ grown, pinned."""
     import os
 
     grown = DX.persist_minhash_index(
@@ -732,10 +780,9 @@ def test_minhash_compact_preserves_frames_and_shrinks_files(spark, tmp_path):
         docs=DX._history_docs(spark, SF_ORACLE),
     )
     DX.append_minhash_index(spark, SF_ORACLE, grown)
-    # A second (disjoint) append cycle: since r17 each append lands ONE
-    # coalesced part-file per frame (the AQE-coalesced write the old
-    # persist form suppressed), so two cycles are needed to guarantee
-    # >2 files — the test's fold-precondition — without weakening it.
+    # A second (disjoint) append cycle: each append may land ONE
+    # coalesced part-file (AQE-coalesced write), so two cycles are
+    # needed to guarantee >2 files — the test's fold-precondition.
     DX.append_minhash_frames(
         grown,
         spark.createDataFrame(
@@ -747,16 +794,13 @@ def test_minhash_compact_preserves_frames_and_shrinks_files(spark, tmp_path):
         ),
     )
     DX.delete_from_minhash_index(spark, grown, _tomb_ids(spark))
-    before = _frames_sorted(spark, grown)
-    n_before = len(
-        [f for f in os.listdir(grown.rows_path) if f.startswith("part-")]
-    )
+    before = _frame_sorted(spark, grown)
+    n_before = len([f for f in os.listdir(grown.path) if f.startswith("part-")])
     DX.compact_minhash_index(spark, grown, target_files=2)
-    after = _frames_sorted(spark, grown)
-    assert after == before and after[0]
-    for path in (grown.sig_path, grown.rows_path):
-        parts = [f for f in os.listdir(path) if f.startswith("part-")]
-        assert 0 < len(parts) <= 2
+    after = _frame_sorted(spark, grown)
+    assert after == before and after
+    parts = [f for f in os.listdir(grown.path) if f.startswith("part-")]
+    assert 0 < len(parts) <= 2
     assert n_before > 2  # the compaction had something to fold
 
 
