@@ -13,6 +13,7 @@ from __future__ import annotations
 
 import json
 import os
+import re
 import sys
 import time
 
@@ -20,6 +21,10 @@ REPO = os.path.dirname(os.path.abspath(__file__))
 sys.path.insert(0, REPO)
 
 SF_DIR = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
+
+#: Core count of the round's reference record: a run on any other
+#: local[N] writes BENCH_DETAIL_c{N}.json instead of overwriting it.
+REFERENCE_CPUS = 4
 
 #: Headline set: the flagship pipeline + one per operator family, chosen to
 #: stress scan/filter/join/agg/window/dedup/text/similarity paths.
@@ -218,6 +223,9 @@ def main() -> None:
     calib_start = host_calib()
 
     spark = get_spark("etl-project-spark-bench")
+    # The local[N] actually used (an already-running session keeps its
+    # own N whatever SPARK_GRAFT_CPUS says now).
+    cpus = int(re.fullmatch(r"local\[(\d+)\]", spark.sparkContext.master).group(1))
     specs = all_specs()
 
     # Warmup: touch every bench table once so OS page cache + JVM JIT are
@@ -263,6 +271,9 @@ def main() -> None:
         return timings
 
     timings = run_all()
+    # Between the cold and steady passes, so a throttle that starts
+    # mid-run is pinned to the half it hit.
+    calib_mid = host_calib()
     # Steady-state: codegen/JIT compiled, shuffle files warm — the
     # per-query cost a long-lived cluster session actually pays.
     # Median of 3 passes per query (round-5 advice): single-pass warm
@@ -293,6 +304,8 @@ def main() -> None:
         },
         "host_calib": host_calib(),
         "host_calib_start": calib_start,
+        "host_calib_mid": calib_mid,
+        "cpus": cpus,
         "sf": float(sf) if sf.replace(".", "").isdigit() else sf,
     }
     # Full per-query detail (cold + steady + calib) goes to a side file;
@@ -301,12 +314,15 @@ def main() -> None:
     # recorded BENCH_r6.json had a beheaded JSON and "parsed": null.
     # Only the DEFAULT scale writes the canonical record: quick contract
     # checks at other SFs (sf0.01 while iterating) used to clobber the
-    # committed sf0.1 record — twice in round 12.
+    # committed sf0.1 record — twice in round 12. Runs on other core
+    # counts likewise get their own record.
     detail_name = (
         "BENCH_DETAIL.json"
         if SF_DIR.rstrip("/") == "/root/testdata/sf0.1"
         else f"BENCH_DETAIL_sf{sf}.json"
     )
+    if cpus != REFERENCE_CPUS:
+        detail_name = detail_name.replace(".json", f"_c{cpus}.json")
     with open(os.path.join(REPO, detail_name), "w") as f:
         json.dump(detail, f, indent=1)
     compact = {

@@ -204,8 +204,9 @@ def q_minhash_near_dup_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
     the family independently of corpus.
     """
     from etl_project_spark.sources.dedup_index import (
+        MinHashIndex,
+        index_for,
         load_minhash_index,
-        minhash_index_for,
     )
 
     d = _t(spark, sf_dir, "documents")
@@ -214,7 +215,9 @@ def q_minhash_near_dup_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
     # answers repeat sweeps from the persisted per-document frame
     # and skips the signing pass entirely. No registration (the
     # driver's correctness runs) → the self-contained inflight path.
-    idx = minhash_index_for(sf_dir, n_hashes=64, shingle_k=3, use_token_ngrams=True)
+    idx = index_for(
+        MinHashIndex, sf_dir, n_hashes=64, shingle_k=3, use_token_ngrams=True
+    )
     signed = load_minhash_index(spark, idx) if idx is not None else None
     return DD.minhash_near_dup_pairs(
         d, "doc_id", "text", n_hashes=64, bands=32, shingle_k=3,
@@ -1022,12 +1025,13 @@ def q_incremental_dedup_new_batch(spark: SparkSession, sf_dir: str) -> DataFrame
 
     from etl_project_spark.sources.dedup_index import (
         BATCH_SOURCE,
-        gram_index_for,
+        GramIndex,
+        index_for,
         load_gram_index,
     )
 
     d = _t(spark, sf_dir, "documents")
-    idx = gram_index_for(sf_dir, n=3)
+    idx = index_for(GramIndex, sf_dir, n=3)
     if idx is not None:
         served = load_gram_index(spark, idx)
         hg = served.select("_hid", "_g")
@@ -1038,7 +1042,7 @@ def q_incremental_dedup_new_batch(spark: SparkSession, sf_dir: str) -> DataFrame
         # twice — but persisting both frames measured SLOWER (~1.0 s
         # recompute vs ~1.9-2.1 s cached reps at sf0.1): the cache
         # materialization jobs cost more than the doubled codegen
-        # shingle scan. The served branch (gram_index_for) is the real
+        # shingle scan. The served branch (index_for) is the real
         # no-rescan answer at scale.
         hg = DD.gram_rows_hashed(
             d.filter(F.col("source") != BATCH_SOURCE), n=3, id_out="_hid"

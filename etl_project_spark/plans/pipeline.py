@@ -499,22 +499,22 @@ def q_incremental_curation_audit(spark: SparkSession, sf_dir: str) -> DataFrame:
     ``curation_shard_audit`` rollup this plan ends with, so batch and
     stream cannot drift (equality pinned in tests/test_streaming.py).
 
-    Scale shape: the anti-join shuffles (nkey) on both sides — at
-    100 TB the persisted index is bucketed by nkey so only the batch
-    side moves; dedup shuffles digests; the classifier shuffles
-    (doc_id, bigint) feature rows; the audit has ≤ 8 groups. The text
-    column never crosses an exchange.
+    Scale shape: the anti-join shuffles (nkey) on both sides; dedup
+    shuffles digests; the classifier shuffles (doc_id, bigint) feature
+    rows; the audit has ≤ 8 groups. The text column never crosses an
+    exchange.
     """
     from etl_project_spark.sources.dedup_index import (
         BATCH_SOURCE,
+        NkeyIndex,
+        index_for,
         load_nkey_index,
-        nkey_index_for,
     )
     from etl_project_spark.streaming.pipeline import history_nkey_index
 
     tune_session(spark)
     d = read_table(spark, sf_dir, "documents")
-    idx = nkey_index_for(sf_dir)
+    idx = index_for(NkeyIndex, sf_dir)
     hist = (
         load_nkey_index(spark, idx)
         if idx is not None
@@ -574,9 +574,8 @@ def q_nkey_indexed_curation_audit(spark: SparkSession, sf_dir: str) -> DataFrame
     re-canonicalized. This is the steady-state shape of continuous
     ingestion at 100 TB: the history nkey set changes only when
     batches are folded in, so every arriving batch anti-joins a
-    build-once parquet (bucketed by nkey in production, so only the
-    batch side shuffles) instead of re-scanning and re-hashing the
-    full corpus.
+    build-once parquet instead of re-scanning and re-hashing the full
+    corpus.
 
     The build is part of the query so the registry entry is
     self-contained and deterministic; ``register=False`` keeps it

@@ -757,9 +757,10 @@ def _pq_encoded(spark: SparkSession, sf_dir: str) -> "tuple[DataFrame, object]":
     # the codes from the pay-once parquet instead of re-running the
     # corpus encode scan. Parameter-matched or not used at all; the
     # codebook travels with the index so no scan re-derives the seeds.
-    from etl_project_spark.sources.ann_index import pq_index_for, read_pq_codes
+    from etl_project_spark.sources.ann_index import PQIndex, read_pq_codes
+    from etl_project_spark.sources.dedup_index import index_for
 
-    idx = pq_index_for(sf_dir, n_cells=_PQ_KS, n_sub=_PQ_SUB)
+    idx = index_for(PQIndex, sf_dir, n_cells=_PQ_KS, n_sub=_PQ_SUB)
     if idx is not None:
         return (
             read_pq_codes(spark, idx).select("vec_id", "_pq"),
@@ -974,12 +975,10 @@ def q_knn_ivfpq_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     recall vs brute) and q_pq_reconstruction_error (code resolution).
     """
     tune_session(spark)
-    from etl_project_spark.sources.ann_index import (
-        pq_index_for,
-        read_pq_codes_probed,
-    )
+    from etl_project_spark.sources.ann_index import PQIndex, read_pq_codes_probed
+    from etl_project_spark.sources.dedup_index import index_for
 
-    idx = pq_index_for(sf_dir, n_cells=_PQ_KS, n_sub=_PQ_SUB)
+    idx = index_for(PQIndex, sf_dir, n_cells=_PQ_KS, n_sub=_PQ_SUB)
     if idx is not None:
         # persisted index: probe cells are partition directories, so
         # the scan opens only 4/16 of the code files and neither the

@@ -10,13 +10,13 @@ query from the codes: 64 float dims (256 B) become 8 uint8 codes, so
 the entire index fits in a fraction of the corpus footprint and the
 per-query work is an ADC scan over 8-byte rows.
 
-Mechanism mirrors the bucketed-table layout registry
-(:mod:`etl_project_spark.sources.bucketed`): ``persist_pq_index``
+Mechanism is the served-index registry of
+:mod:`etl_project_spark.sources.dedup_index`: ``persist_pq_index``
 encodes the corpus once — IVF cell assignment + PQ codes in the same
-scan — and registers the layout in a process-local map keyed by the
-corpus dir; the PQ query builders consult the map and, when the
-registered parameters match, substitute a scan of the persisted codes
-for the encode. Registration is an explicit session opt-in, so the
+scan — and registers the handle for the corpus dir; the PQ query
+builders ask ``index_for(PQIndex, …)`` and, when the registered
+parameters match, substitute a scan of the persisted codes for the
+encode. Registration is an explicit session opt-in, so the
 driver's correctness runs (no registration) always exercise the
 self-contained path, and parity between the two paths is asserted by
 ``tests/test_ann_index.py``.
@@ -37,15 +37,21 @@ travels with the codes.
 
 from __future__ import annotations
 
-import os
-
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 
 class PQIndex:
-    """Handle for one persisted index: parquet path + build params."""
+    """Handle for one persisted index: parquet path + build params.
+    Codes built under a different codebook are not an answer, they are
+    a wrong answer, so the registry lookup
+    (:func:`~etl_project_spark.sources.dedup_index.index_for`) matches
+    both ``PARAMS``. The codes live in a caller path or the context's
+    own directory, never a module-owned one, so a rebuild or clear
+    deletes nothing."""
 
+    PARAMS = ("n_cells", "n_sub")
+    owns_path = False
     __slots__ = ("path", "seeds", "n_cells", "n_sub")
 
     def __init__(
@@ -55,29 +61,6 @@ class PQIndex:
         self.seeds = seeds
         self.n_cells = n_cells
         self.n_sub = n_sub
-
-
-#: (abs sf_dir) -> PQIndex for that corpus' embeddings table.
-_PQ_LAYOUT: dict[str, PQIndex] = {}
-
-
-def register_pq_index(sf_dir: str, index: PQIndex) -> None:
-    _PQ_LAYOUT[os.path.abspath(sf_dir)] = index
-
-
-def clear_pq_index() -> None:
-    _PQ_LAYOUT.clear()
-
-
-def pq_index_for(sf_dir: str, *, n_cells: int, n_sub: int) -> PQIndex | None:
-    """The registered index, ONLY if its build parameters match the
-    query's — codes encoded under a different codebook are not an
-    answer, they are a wrong answer, so a parameter mismatch means
-    "no index" rather than "close enough"."""
-    idx = _PQ_LAYOUT.get(os.path.abspath(sf_dir))
-    if idx is not None and idx.n_cells == n_cells and idx.n_sub == n_sub:
-        return idx
-    return None
 
 
 def persist_pq_index(
@@ -99,6 +82,10 @@ def persist_pq_index(
     """
     from etl_project_spark.catalog import read_table
     from etl_project_spark.operators import similarity as SIM
+    from etl_project_spark.sources.dedup_index import (
+        query_scoped_index_dir,
+        register_index,
+    )
 
     e = read_table(spark, sf_dir, "embeddings")
     seeds = SIM.deterministic_centroids(e, "embedding", "vec_id", n_cells=n_cells)
@@ -107,8 +94,6 @@ def persist_pq_index(
         # per-context unique dir: a shared path raced across sessions
         # (one overwrite deleting part-files under another's scan) —
         # same isolation rule as q_knn_ivf_indexed_topk's index dir.
-        from etl_project_spark.sources.dedup_index import query_scoped_index_dir
-
         path = query_scoped_index_dir(spark, "pq", sf_dir)
     enc = SIM.ivf_assign(e, "embedding", seeds).select(
         "vec_id",
@@ -122,7 +107,7 @@ def persist_pq_index(
         # codes. register=False builds a handle without the global side
         # effect — what a registry query embedding its own index build
         # must use, so running it never flips OTHER queries' paths.
-        register_pq_index(sf_dir, idx)
+        register_index(sf_dir, idx)
     return idx
 
 

@@ -11,26 +11,22 @@ topology changes far more slowly than the arriving batches. A real
 subsequent batch from the persisted index — the same asymmetric
 economics as the PQ/IVF layer (:mod:`etl_project_spark.sources.ann_index`).
 
-Mechanism mirrors ``ann_index``: ``persist_gram_index`` /
-``persist_simhash_index`` build the frame once with THE shared builder
-(so served and inflight rows are definitionally identical), write it to
-parquet, and register the layout in a process-local map keyed by the
-corpus dir + build parameters. Consumers (the batch incremental plan,
-or a caller wiring up the streaming twins) ask ``*_index_for`` and fall
-back to the inflight builder when nothing matches. Registration is an
-explicit session opt-in, so the driver's correctness runs (no
-registration) always exercise the self-contained path; parity between
-the two paths is asserted by ``tests/test_dedup_index.py``.
+Mechanism, shared by every index kind here and by the PQ codes of
+``ann_index``: ``persist_*`` builds the frame once with THE shared
+builder (so served and inflight rows are definitionally identical),
+writes it to plain parquet, and :func:`register_index` records the
+handle in ONE process-local registry keyed by (index kind, absolute
+corpus dir). Consumers (the batch incremental plan, or a caller wiring
+up the streaming twins) ask :func:`index_for` with their build
+parameters and fall back to the inflight builder when nothing matches.
+Registration is an explicit session opt-in, so the driver's
+correctness runs (no registration) always exercise the self-contained
+path; parity between the two paths is asserted by
+``tests/test_dedup_index.py``.
 
 A parameter mismatch means "no index", never "close enough": grams
 hashed at a different ``n`` (or postings built for a different Hamming
 budget / block split) are not an answer, they are a wrong answer.
-
-In production both tables would be bucketed by their join key (``_g``;
-``(_cmask, _key)``) so the per-batch probe join is shuffle-free on the
-history side — the plumbing here keeps plain parquet (the bucketed
-layout registry in :mod:`etl_project_spark.sources.bucketed` shows the
-bucketed variant of the same pattern).
 """
 
 from __future__ import annotations
@@ -38,6 +34,7 @@ from __future__ import annotations
 import os
 import shutil
 import tempfile
+from typing import TypeVar
 
 from pyspark.sql import DataFrame, SparkSession
 
@@ -58,6 +55,8 @@ class GramIndex:
     Caller-supplied paths are never deleted (the caller owns them).
     """
 
+    #: The build parameters :func:`index_for` must match.
+    PARAMS = ("n",)
     __slots__ = ("path", "n", "owns_path")
 
     def __init__(self, path: str, n: int, owns_path: bool = False) -> None:
@@ -70,6 +69,7 @@ class SimHashIndex:
     """Handle for one persisted SimHash posting index (same
     ``owns_path`` cleanup contract as :class:`GramIndex`)."""
 
+    PARAMS = ("max_hamming", "eq_blocks")
     __slots__ = ("path", "max_hamming", "eq_blocks", "owns_path")
 
     def __init__(
@@ -110,6 +110,7 @@ class MinHashIndex:
     kept for callers that list the index's directories.
     """
 
+    PARAMS = ("n_hashes", "shingle_k", "use_token_ngrams")
     __slots__ = ("path", "n_hashes", "shingle_k", "use_token_ngrams", "owns_path")
 
     def __init__(
@@ -162,122 +163,26 @@ class NkeyIndex:
     Counts are correct under the modeled exactly-once single-writer
     seam; a replayed epoch would double-count owners (set membership
     survives, delete accuracy does not) — the same contract the
-    MinHash appends document."""
+    MinHash appends document.
 
-    __slots__ = ("path", "owns_path", "table", "n_buckets")
+    Decision: the ledger is plain parquet, like every other index, and
+    persist, append and delete are each one parquet write. An
+    nkey-bucketed catalog table (round 18) made the fold shuffle-free
+    but ran catalog DDL on every build, append and compaction, and it
+    never paid: ``q_nkey_indexed_curation_audit`` took 1.641 s
+    bucketed vs 1.430 s plain at sf0.1 and 3.837 vs 3.810 s at sf1
+    (``records/bucketed_index_sf1_r18.txt``). On a 4-core host, 5
+    interleaved sf0.1 process pairs, steady medians went 2.01 → 1.88 s
+    for that query and 1.88 → 1.70 s for ``q_nkey_index_append_audit``,
+    with identical results (BASELINE.md "nkey ledger as plain
+    parquet")."""
 
-    def __init__(
-        self,
-        path: str,
-        owns_path: bool = False,
-        table: str | None = None,
-        n_buckets: int = 0,
-    ) -> None:
+    PARAMS = ()
+    __slots__ = ("path", "owns_path")
+
+    def __init__(self, path: str, owns_path: bool = False) -> None:
         self.path = path
         self.owns_path = owns_path
-        # nkey-BUCKETED external table (round 18): the live-set fold is
-        # a groupBy on nkey, so the bucketed scan makes it shuffle-free
-        # — exactly the layout the load_nkey_index docstring names as
-        # the production shape. None = plain parquet, graceful fallback.
-        self.table = table
-        self.n_buckets = n_buckets
-
-
-def _index_buckets(spark: SparkSession) -> int:
-    """Bucket count for index-table writes. Locally this is the
-    session's default parallelism (one bucket per core keeps the probe
-    scan fully parallel); at production scale it is sized once per
-    index family via ``SPARK_GRAFT_INDEX_BUCKETS`` — a multiple of the
-    cluster's target parallelism at the data's FULL scale, per the
-    bucketed-layout rules in :mod:`etl_project_spark.sources.bucketed`.
-    The count only affects layout, never results."""
-    return int(
-        os.environ.get(
-            "SPARK_GRAFT_INDEX_BUCKETS", spark.sparkContext.defaultParallelism
-        )
-    )
-
-
-def _index_table_name(kind: str, path: str) -> str:
-    """Catalog name for an index table: per-(pid, path-digest) so two
-    processes sharing a warehouse can never cross-wire each other's
-    builds (the query_scoped_index_dir race note, catalog edition) and
-    repeat builds in one session resolve to the same name (the
-    overwrite path drops + recreates it)."""
-    import hashlib
-
-    tag = hashlib.sha1(os.path.abspath(path).encode()).hexdigest()[:8]
-    return f"idx_{kind}_{os.getpid()}_{tag}"
-
-
-def _write_bucketed_index(
-    df: DataFrame,
-    table: str,
-    path: str,
-    key: str,
-    n_buckets: int,
-    *,
-    mode: str = "overwrite",
-    align: bool = False,
-) -> None:
-    """Write an index frame as an EXTERNAL parquet table bucketed on
-    ``key`` at ``path`` — the pay-once shuffle that makes every later
-    ``key``-clustered consumer (groupBy/dropDuplicates/equi-join on
-    ``key``) exchange-free (guide §2.4; the sources/bucketed.py
-    pattern, pointed at an explicit location so the per-(pid, corpus)
-    temp-dir isolation contract is unchanged).
-
-    No ``sortBy``: every consumer of these frames is a hash aggregate
-    or hash join on ``key`` — nothing needs ordered runs, and the
-    per-task sort was measurable build cost at bench scale for zero
-    read benefit. ``align=True`` adds a ``repartition(n_buckets,
-    key)`` so the write lands one file per bucket — compaction uses it
-    because its input arrives arbitrarily partitioned; the build and
-    append paths skip it (the bucketed write is CORRECT under any
-    input partitioning — misalignment only costs extra files per
-    bucket, which compaction folds). ``mode="append"`` requires the table to
-    exist with the same spec (the caller passes the handle's own
-    ``n_buckets``, so it cannot drift)."""
-    spark = df.sparkSession
-    if align:
-        df = df.repartition(n_buckets, key)
-    writer = df.write.format("parquet").mode(mode).bucketBy(n_buckets, key)
-    if mode == "overwrite":
-        spark.sql(f"DROP TABLE IF EXISTS {table}")
-        shutil.rmtree(path, ignore_errors=True)
-        writer = writer.option("path", path)
-    writer.saveAsTable(table)
-
-
-def _register_bucketed_index(
-    spark: SparkSession, table: str, path: str, schema_ddl: str, key: str,
-    n_buckets: int,
-) -> None:
-    """(Re)point ``table`` at existing bucketed parquet files under
-    ``path`` — the metadata half of a compaction's directory swap."""
-    spark.sql(f"DROP TABLE IF EXISTS {table}")
-    spark.sql(
-        f"CREATE TABLE {table} ({schema_ddl}) USING parquet "
-        f"CLUSTERED BY ({key}) INTO {n_buckets} BUCKETS "
-        f"LOCATION '{path}'"
-    )
-
-
-def _table_frame(spark: SparkSession, table: str | None, path: str) -> DataFrame:
-    """Resolve an index frame through its bucketed table when this
-    session's catalog knows it, else plain parquet. The refresh is
-    load-bearing: appends/deletes/compactions mutate the table's FILES
-    (possibly from a foreachBatch-cloned session or via directory
-    swaps), and a session that scanned the table earlier holds a
-    cached file listing that would silently serve the pre-mutation
-    snapshot (measured: a streamed append was invisible to the
-    builder session until refreshed). Cheap local re-list here; a
-    manifest table format does this bookkeeping transactionally at
-    scale."""
-    if table is not None and spark.catalog.tableExists(table):
-        spark.catalog.refreshTable(table)
-        return spark.table(table)
-    return spark.read.parquet(path)
 
 
 def query_scoped_index_dir(spark: SparkSession, kind: str, sf_dir: str) -> str:
@@ -304,10 +209,11 @@ def query_scoped_index_dir(spark: SparkSession, kind: str, sf_dir: str) -> str:
     return os.path.join(context_dir(spark, f"etl_project_spark_{kind}"), f"{base}_{tag}")
 
 
-_GRAM: dict[str, GramIndex] = {}
-_SIMHASH: dict[str, SimHashIndex] = {}
-_MINHASH: dict[str, MinHashIndex] = {}
-_NKEY: dict[str, NkeyIndex] = {}
+#: (handle class, abs corpus dir) -> the registered handle: the one
+#: serving registry for every index kind, PQ codes included.
+_INDEXES: dict[tuple[type, str], object] = {}
+
+_Index = TypeVar("_Index")
 
 
 def _drop(idx) -> None:
@@ -316,18 +222,51 @@ def _drop(idx) -> None:
         shutil.rmtree(os.path.dirname(idx.path), ignore_errors=True)
 
 
-def clear_dedup_indexes() -> None:
-    for idx in (
-        *_GRAM.values(),
-        *_SIMHASH.values(),
-        *_MINHASH.values(),
-        *_NKEY.values(),
-    ):
+def register_index(sf_dir: str, idx) -> None:
+    """Serve ``idx`` for its kind over the corpus at ``sf_dir``. A
+    rebuild replaces the kind's previous handle and reaps that
+    handle's directory if the module owns it."""
+    key = (type(idx), os.path.abspath(sf_dir))
+    _drop(_INDEXES.get(key))
+    _INDEXES[key] = idx
+
+
+def index_for(kind: type[_Index], sf_dir: str, **params) -> _Index | None:
+    """The registered ``kind`` handle for ``sf_dir``, ONLY if every
+    build parameter matches. ``params`` must name exactly the kind's
+    ``PARAMS``, so a caller cannot match on a subset."""
+    if set(params) != set(kind.PARAMS):
+        raise TypeError(
+            f"{kind.__name__} lookup takes {kind.PARAMS}, got {tuple(params)}"
+        )
+    idx = _INDEXES.get((kind, os.path.abspath(sf_dir)))
+    if idx is not None and all(getattr(idx, k) == v for k, v in params.items()):
+        return idx
+    return None
+
+
+def clear_indexes() -> None:
+    """Forget every registered index and reap the module-owned dirs."""
+    for idx in _INDEXES.values():
         _drop(idx)
-    _GRAM.clear()
-    _SIMHASH.clear()
-    _MINHASH.clear()
-    _NKEY.clear()
+    _INDEXES.clear()
+
+
+def _swap_in(df: DataFrame, path: str) -> None:
+    """Replace the parquet directory at ``path`` with ``df``: write a
+    staging dir beside it, rename the live dir aside, rename the
+    staging dir in, then delete the old one. A failed write leaves
+    ``path`` untouched; the next swap clears its leftover staging dir.
+    (On an object store, with no atomic rename, this is the
+    Delta/Iceberg OPTIMIZE + snapshot swap.)"""
+    staging = path.rstrip("/") + ".staging_compact"
+    old = path.rstrip("/") + ".pre_compact"
+    shutil.rmtree(staging, ignore_errors=True)
+    shutil.rmtree(old, ignore_errors=True)
+    df.write.mode("overwrite").parquet(staging)
+    os.rename(path, old)
+    os.rename(staging, path)
+    shutil.rmtree(old, ignore_errors=True)
 
 
 def _history_docs(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -356,17 +295,8 @@ def persist_gram_index(
         "overwrite"
     ).parquet(target)
     idx = GramIndex(target, n, owns_path=owns)
-    key = os.path.abspath(sf_dir)
-    _drop(_GRAM.get(key))  # rebuild: reap the replaced module-owned dir
-    _GRAM[key] = idx
+    register_index(sf_dir, idx)
     return idx
-
-
-def gram_index_for(sf_dir: str, *, n: int) -> GramIndex | None:
-    idx = _GRAM.get(os.path.abspath(sf_dir))
-    if idx is not None and idx.n == n:
-        return idx
-    return None
 
 
 def load_gram_index(spark: SparkSession, idx: GramIndex) -> DataFrame:
@@ -404,9 +334,7 @@ def persist_simhash_index(
     ).write.mode("overwrite").parquet(target)
     idx = SimHashIndex(target, max_hamming, eq_blocks, owns_path=owns)
     if register:  # see persist_minhash_index: False = caller-scoped build
-        key = os.path.abspath(sf_dir)
-        _drop(_SIMHASH.get(key))  # rebuild: reap the replaced module-owned dir
-        _SIMHASH[key] = idx
+        register_index(sf_dir, idx)
     return idx
 
 
@@ -451,19 +379,6 @@ def append_simhash_index(
         ),
     )
     return idx
-
-
-def simhash_index_for(
-    sf_dir: str, *, max_hamming: int, eq_blocks: int
-) -> SimHashIndex | None:
-    idx = _SIMHASH.get(os.path.abspath(sf_dir))
-    if (
-        idx is not None
-        and idx.max_hamming == max_hamming
-        and idx.eq_blocks == eq_blocks
-    ):
-        return idx
-    return None
 
 
 def load_simhash_index(spark: SparkSession, idx: SimHashIndex) -> DataFrame:
@@ -515,24 +430,8 @@ def persist_minhash_index(
     # next run (same session, e.g. mid-sweep) into a served run —
     # that would corrupt the inflight timing series, not its answer.
     if register:
-        key = os.path.abspath(sf_dir)
-        _drop(_MINHASH.get(key))  # rebuild: reap the replaced module-owned dir
-        _MINHASH[key] = idx
+        register_index(sf_dir, idx)
     return idx
-
-
-def minhash_index_for(
-    sf_dir: str, *, n_hashes: int, shingle_k: int, use_token_ngrams: bool
-) -> MinHashIndex | None:
-    idx = _MINHASH.get(os.path.abspath(sf_dir))
-    if (
-        idx is not None
-        and idx.n_hashes == n_hashes
-        and idx.shingle_k == shingle_k
-        and idx.use_token_ngrams == use_token_ngrams
-    ):
-        return idx
-    return None
 
 
 def minhash_frame_ddl(n_hashes: int) -> str:
@@ -755,24 +654,16 @@ def compact_minhash_index(
     (and any crash-retry duplicates persist on disk); read
     amplification grows without bound until someone rewrites. This is
     that rewrite: the frame is read, duplicate ``_id`` rows from
-    retried appends/deletes are folded, coalesced, staged, and
-    atomically swapped in (``os.rename`` of the directory — on an
-    object store this is the Delta/Iceberg OPTIMIZE + snapshot swap,
-    since object stores have no atomic rename).
+    retried appends/deletes are folded, coalesced, and swapped in
+    (:func:`_swap_in`).
 
     Compacted ≡ grown frame equality is pinned in
     tests/test_dedup_index.py.
     """
-    staging = idx.path.rstrip("/") + ".staging_compact"
-    old = idx.path.rstrip("/") + ".pre_compact"
-    shutil.rmtree(staging, ignore_errors=True)
-    shutil.rmtree(old, ignore_errors=True)
-    load_minhash_index(spark, idx).dropDuplicates(["_id"]).coalesce(
-        target_files
-    ).write.mode("overwrite").parquet(staging)
-    os.rename(idx.path, old)
-    os.rename(staging, idx.path)
-    shutil.rmtree(old, ignore_errors=True)
+    _swap_in(
+        load_minhash_index(spark, idx).dropDuplicates(["_id"]).coalesce(target_files),
+        idx.path,
+    )
     return idx
 
 
@@ -799,28 +690,13 @@ def persist_nkey_index(
     owns = path is None
     if path is None:
         path = tempfile.mkdtemp(prefix="nkey_index_")
-    target = os.path.join(path, "nkeys")
-    # nkey-BUCKETED ledger (r18, VERDICT r17 #4): the live-set fold
-    # (groupBy nkey) and the consumers' anti-joins cluster on nkey, so
-    # the bucketed scan serves them exchange-free — the layout
-    # load_nkey_index's docstring always named as the production
-    # shape, now actually written.
-    nb = _index_buckets(spark)
-    table = _index_table_name("nkeys", target)
-    _write_bucketed_index(
-        _nkey_ledger(_history_docs(spark, sf_dir) if docs is None else docs),
-        table, target, "nkey", nb,
-    )
-    idx = NkeyIndex(target, owns_path=owns, table=table, n_buckets=nb)
+    idx = NkeyIndex(os.path.join(path, "nkeys"), owns_path=owns)
+    _nkey_ledger(
+        _history_docs(spark, sf_dir) if docs is None else docs
+    ).write.mode("overwrite").parquet(idx.path)
     if register:  # see persist_minhash_index: False = caller-scoped build
-        key = os.path.abspath(sf_dir)
-        _drop(_NKEY.get(key))  # rebuild: reap the replaced module-owned dir
-        _NKEY[key] = idx
+        register_index(sf_dir, idx)
     return idx
-
-
-def nkey_index_for(sf_dir: str) -> NkeyIndex | None:
-    return _NKEY.get(os.path.abspath(sf_dir))
 
 
 def _nkey_ledger(docs: DataFrame) -> DataFrame:
@@ -840,24 +716,29 @@ def _nkey_ledger(docs: DataFrame) -> DataFrame:
     )
 
 
-def load_nkey_index(spark: SparkSession, idx: NkeyIndex) -> DataFrame:
-    """The LIVE distinct key set: fold the signed owner-count deltas
-    and keep keys with surviving owners. Output schema is the same
-    one-column ``nkey`` frame the pre-ledger format served, so every
-    anti-join consumer is oblivious to the format change. The fold is
-    a map-side-combined hash aggregate over a two-column parquet —
-    and since r18 the ledger IS bucketed by nkey, so the fold runs
-    shuffle-free (plain-parquet fallback for handles without a live
-    catalog entry in this session)."""
+def _nkey_fold(spark: SparkSession, idx: NkeyIndex) -> DataFrame:
+    """The folded ledger ``(nkey, _n)``: signed deltas summed per key,
+    keys with no surviving owner dropped. A map-side-combined hash
+    aggregate over the two-column parquet, read with its schema given
+    so no schema-inference job runs; each read lists the directory
+    afresh, so appends from any session are seen."""
     from pyspark.sql import functions as F
 
-    src = _table_frame(spark, idx.table, idx.path)
     return (
-        src.groupBy("nkey")
+        spark.read.schema("nkey STRING, _n BIGINT")
+        .parquet(idx.path)
+        .groupBy("nkey")
         .agg(F.sum("_n").alias("_n"))
         .filter(F.col("_n") > 0)
-        .select("nkey")
     )
+
+
+def load_nkey_index(spark: SparkSession, idx: NkeyIndex) -> DataFrame:
+    """The LIVE distinct key set (:func:`_nkey_fold`'s keys). Output
+    schema is the same one-column ``nkey`` frame the pre-ledger format
+    served, so every anti-join consumer is oblivious to the format
+    change."""
+    return _nkey_fold(spark, idx).select("nkey")
 
 
 def append_nkey_index(
@@ -887,21 +768,8 @@ def append_nkey_index(
     batch = read_table(spark, sf_dir, "documents").filter(
         F.col("source") == batch_source
     )
-    _append_nkey_ledger(spark, idx, _nkey_ledger(batch))
+    _nkey_ledger(batch).write.mode("append").parquet(idx.path)
     return idx
-
-
-def _append_nkey_ledger(
-    spark: SparkSession, idx: NkeyIndex, ledger: DataFrame
-) -> None:
-    """Blind-append ledger delta rows, preserving the bucketed layout
-    when the handle carries one (plain parquet append otherwise)."""
-    if idx.table is not None and spark.catalog.tableExists(idx.table):
-        _write_bucketed_index(
-            ledger, idx.table, idx.path, "nkey", idx.n_buckets, mode="append"
-        )
-    else:
-        ledger.write.mode("append").parquet(idx.path)
 
 
 def delete_from_nkey_index(
@@ -925,11 +793,9 @@ def delete_from_nkey_index(
     """
     from pyspark.sql import functions as F
 
-    _append_nkey_ledger(
-        spark,
-        idx,
-        _nkey_ledger(tombstoned_docs).select("nkey", (-F.col("_n")).alias("_n")),
-    )
+    _nkey_ledger(tombstoned_docs).select(
+        "nkey", (-F.col("_n")).alias("_n")
+    ).write.mode("append").parquet(idx.path)
     return idx
 
 
@@ -940,33 +806,5 @@ def compact_nkey_index(spark: SparkSession, idx: NkeyIndex) -> NkeyIndex:
     bounds both the ledger's file count and the probe-side
     aggregate's input after K append/delete cycles. Folded ≡ unfolded
     live set is pinned in tests/test_dedup_index.py."""
-    from pyspark.sql import functions as F
-
-    staging = idx.path.rstrip("/") + ".staging_compact"
-    old = idx.path.rstrip("/") + ".pre_compact"
-    shutil.rmtree(staging, ignore_errors=True)
-    shutil.rmtree(old, ignore_errors=True)
-    folded = (
-        spark.read.parquet(idx.path)
-        .groupBy("nkey")
-        .agg(F.sum("_n").alias("_n"))
-        .filter(F.col("_n") > 0)
-    )
-    bucketed = idx.table is not None and spark.catalog.tableExists(idx.table)
-    if bucketed:
-        # Re-bucket at the fold width (8 — one file per bucket), so the
-        # compacted ledger keeps the shuffle-free fold property.
-        stg_table = _index_table_name("stgnk", staging)
-        _write_bucketed_index(folded, stg_table, staging, "nkey", 8, align=True)
-        spark.sql(f"DROP TABLE IF EXISTS {stg_table}")
-    else:
-        folded.coalesce(8).write.mode("overwrite").parquet(staging)
-    os.rename(idx.path, old)
-    os.rename(staging, idx.path)
-    shutil.rmtree(old, ignore_errors=True)
-    if bucketed:
-        _register_bucketed_index(
-            spark, idx.table, idx.path, "nkey STRING, _n BIGINT", "nkey", 8
-        )
-        idx.n_buckets = 8
+    _swap_in(_nkey_fold(spark, idx).coalesce(8), idx.path)
     return idx

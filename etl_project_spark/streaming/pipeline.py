@@ -36,11 +36,10 @@ Design decisions, Spark-first (each one a precedent from this package):
   (:func:`curation_shard_audit`, shared verbatim with the batch plan's
   tail so the two cannot drift).
 
-At 100 TB: the nkey index is the engineered piece (bucketed by nkey so
-the per-trigger anti-join avoids a history shuffle — the
-``sources/bucketed.py`` pattern); stream state is one row per distinct
-arriving nkey, the same cardinality the batch plan's dedup shuffle
-carries.
+At 100 TB: the nkey index is the engineered piece (a plain-parquet
+owner-count ledger, built once and folded at load); stream state is
+one row per distinct arriving nkey, the same cardinality the batch
+plan's dedup shuffle carries.
 """
 
 from __future__ import annotations

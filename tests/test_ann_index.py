@@ -10,6 +10,7 @@ import pytest
 
 from etl_project_spark.plans.registry import all_specs
 from etl_project_spark.sources import ann_index as AX
+from etl_project_spark.sources import dedup_index as DX
 from tests.conftest import SF_ORACLE
 
 PQ_QUERIES = ("q_pq_adc_topk", "q_pq_reconstruction_error", "q_knn_ivfpq_topk")
@@ -21,7 +22,7 @@ def pq_index(spark, tmp_path):
         spark, SF_ORACLE, path=str(tmp_path / "pq_index")
     )
     yield idx
-    AX.clear_pq_index()
+    DX.clear_indexes()
 
 
 def _run(spark, name):
@@ -30,14 +31,16 @@ def _run(spark, name):
 
 @pytest.mark.parametrize("name", PQ_QUERIES)
 def test_served_results_match_selfcontained(spark, tmp_path, name):
-    AX.clear_pq_index()  # belt-and-braces: no stale registration
+    DX.clear_indexes()  # belt-and-braces: no stale registration
     want = _run(spark, name)
     idx = AX.persist_pq_index(spark, SF_ORACLE, path=str(tmp_path / "pq"))
     try:
-        assert AX.pq_index_for(SF_ORACLE, n_cells=idx.n_cells, n_sub=idx.n_sub)
+        assert DX.index_for(
+            AX.PQIndex, SF_ORACLE, n_cells=idx.n_cells, n_sub=idx.n_sub
+        )
         got = _run(spark, name)
     finally:
-        AX.clear_pq_index()
+        DX.clear_indexes()
     assert got == want and len(got) > 0
 
 
@@ -66,11 +69,12 @@ def test_ivfpq_scan_prunes_unprobed_cells(spark, pq_index):
 def test_parameter_mismatch_disables_index(spark, pq_index):
     """Codes built under a different codebook are a wrong answer, not a
     fallback: mismatched params must resolve to 'no index'."""
-    assert AX.pq_index_for(SF_ORACLE, n_cells=pq_index.n_cells, n_sub=4) is None
-    assert AX.pq_index_for(SF_ORACLE, n_cells=99, n_sub=pq_index.n_sub) is None
+    pq = AX.PQIndex
+    assert DX.index_for(pq, SF_ORACLE, n_cells=pq_index.n_cells, n_sub=4) is None
+    assert DX.index_for(pq, SF_ORACLE, n_cells=99, n_sub=pq_index.n_sub) is None
     assert (
-        AX.pq_index_for(
-            SF_ORACLE, n_cells=pq_index.n_cells, n_sub=pq_index.n_sub
+        DX.index_for(
+            AX.PQIndex, SF_ORACLE, n_cells=pq_index.n_cells, n_sub=pq_index.n_sub
         )
         is pq_index
     )

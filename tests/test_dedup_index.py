@@ -9,6 +9,7 @@ from __future__ import annotations
 import pytest
 
 from etl_project_spark.plans.registry import all_specs
+from etl_project_spark.sources import ann_index as AX
 from etl_project_spark.sources import dedup_index as DX
 from tests.conftest import SF_ORACLE
 
@@ -17,7 +18,7 @@ from tests.conftest import SF_ORACLE
 def gram_index(spark, tmp_path):
     idx = DX.persist_gram_index(spark, SF_ORACLE, path=str(tmp_path / "gidx"))
     yield idx
-    DX.clear_dedup_indexes()
+    DX.clear_indexes()
 
 
 def _run_incremental(spark):
@@ -30,13 +31,13 @@ def _run_incremental(spark):
 
 
 def test_gram_index_served_equals_inflight(spark, tmp_path):
-    DX.clear_dedup_indexes()
+    DX.clear_indexes()
     inflight = _run_incremental(spark)
     DX.persist_gram_index(spark, SF_ORACLE, path=str(tmp_path / "gidx"))
     try:
         served = _run_incremental(spark)
     finally:
-        DX.clear_dedup_indexes()
+        DX.clear_indexes()
     assert served == inflight and inflight
 
 
@@ -60,7 +61,7 @@ def test_gram_index_served_plan_skips_history_scan(spark, gram_index):
     assert "Not(EqualTo(source" not in plan
     # and without the index the history scan IS there (guards the
     # assertion itself against filter-string drift)
-    DX.clear_dedup_indexes()
+    DX.clear_indexes()
     inflight_plan = (
         all_specs()["q_incremental_dedup_new_batch"]
         .builder(spark, SF_ORACLE)
@@ -72,9 +73,9 @@ def test_gram_index_served_plan_skips_history_scan(spark, gram_index):
 
 
 def test_gram_index_param_mismatch_refuses(spark, gram_index):
-    assert DX.gram_index_for(SF_ORACLE, n=3) is gram_index
-    assert DX.gram_index_for(SF_ORACLE, n=5) is None
-    assert DX.gram_index_for("/nonexistent", n=3) is None
+    assert DX.index_for(DX.GramIndex, SF_ORACLE, n=3) is gram_index
+    assert DX.index_for(DX.GramIndex, SF_ORACLE, n=5) is None
+    assert DX.index_for(DX.GramIndex, "/nonexistent", n=3) is None
 
 
 def test_simhash_index_served_equals_inflight(spark, tmp_path):
@@ -97,13 +98,14 @@ def test_simhash_index_served_equals_inflight(spark, tmp_path):
         spark, SF_ORACLE, max_hamming=3, eq_blocks=2, path=str(tmp_path / "sidx")
     )
     try:
-        assert DX.simhash_index_for(SF_ORACLE, max_hamming=3, eq_blocks=2) is idx
-        assert DX.simhash_index_for(SF_ORACLE, max_hamming=2, eq_blocks=2) is None
+        kind = DX.SimHashIndex
+        assert DX.index_for(kind, SF_ORACLE, max_hamming=3, eq_blocks=2) is idx
+        assert DX.index_for(kind, SF_ORACLE, max_hamming=2, eq_blocks=2) is None
         served = sorted(
             tuple(r) for r in DX.load_simhash_index(spark, idx).collect()
         )
     finally:
-        DX.clear_dedup_indexes()
+        DX.clear_indexes()
     assert served == inflight and inflight
 
 
@@ -135,7 +137,7 @@ def test_simhash_stream_from_persisted_index(spark, tmp_path):
     try:
         served = matches(DX.load_simhash_index(spark, idx))
     finally:
-        DX.clear_dedup_indexes()
+        DX.clear_indexes()
     assert served == inflight
 
 
@@ -206,13 +208,146 @@ def test_module_owned_index_dirs_are_reaped(spark, tmp_path):
     b = DX.persist_gram_index(spark, SF_ORACLE)  # rebuild, same corpus
     assert not os.path.isdir(dir_a)              # replaced dir reaped
     dir_b = os.path.dirname(b.path)
-    DX.clear_dedup_indexes()
+    DX.clear_indexes()
     assert not os.path.isdir(dir_b)              # cleared dir reaped
 
     mine = str(tmp_path / "caller_owned")
     c = DX.persist_gram_index(spark, SF_ORACLE, path=mine)
-    DX.clear_dedup_indexes()
+    DX.clear_indexes()
     assert os.path.isdir(os.path.dirname(c.path))  # caller path kept
+
+
+#: Every served-index kind: its registering build (``path=None`` gives a
+#: module-owned dir, except PQ's context-scoped one) and the build
+#: parameters that build registers.
+_KINDS = {
+    DX.GramIndex: (
+        lambda spark, path: DX.persist_gram_index(spark, SF_ORACLE, path=path),
+        {"n": 3},
+    ),
+    DX.SimHashIndex: (
+        lambda spark, path: DX.persist_simhash_index(spark, SF_ORACLE, path=path),
+        {"max_hamming": 3, "eq_blocks": 2},
+    ),
+    DX.MinHashIndex: (
+        lambda spark, path: DX.persist_minhash_index(spark, SF_ORACLE, path=path),
+        {"n_hashes": 64, "shingle_k": 3, "use_token_ngrams": True},
+    ),
+    DX.NkeyIndex: (
+        lambda spark, path: DX.persist_nkey_index(spark, SF_ORACLE, path=path),
+        {},
+    ),
+    AX.PQIndex: (
+        lambda spark, path: AX.persist_pq_index(spark, SF_ORACLE, path=path),
+        {"n_cells": 16, "n_sub": 8},
+    ),
+}
+
+
+@pytest.mark.parametrize("kind", list(_KINDS), ids=lambda k: k.__name__)
+def test_one_registry_every_kind(spark, kind):
+    """One registry serves all five kinds: a lookup refuses any
+    parameter mismatch, a rebuild reaps only that kind's replaced
+    module-owned dir and leaves every other kind registered, and one
+    clear empties every kind, PQ included."""
+    import os
+
+    persist, params = _KINDS[kind]
+    DX.clear_indexes()
+    try:
+        handles = {k: build(spark, None) for k, (build, _) in _KINDS.items()}
+        for k, h in handles.items():
+            assert DX.index_for(k, SF_ORACLE, **_KINDS[k][1]) is h
+
+        old = handles[kind]
+        assert DX.index_for(kind, "/nonexistent", **params) is None
+        for name, value in params.items():
+            wrong = (not value) if isinstance(value, bool) else value + 1
+            assert DX.index_for(kind, SF_ORACLE, **{**params, name: wrong}) is None
+        with pytest.raises(TypeError):
+            DX.index_for(kind, SF_ORACLE, **params, bogus=1)
+
+        new = persist(spark, None)
+        assert DX.index_for(kind, SF_ORACLE, **params) is new
+        if old.owns_path:
+            assert not os.path.isdir(os.path.dirname(old.path))  # reaped
+        else:  # PQ's context-scoped dir is rewritten in place, never reaped
+            assert old.path == new.path and os.path.isdir(new.path)
+        for k, h in handles.items():
+            if k is not kind:
+                assert DX.index_for(k, SF_ORACLE, **_KINDS[k][1]) is h
+                assert os.path.isdir(h.path)
+        handles[kind] = new
+    finally:
+        DX.clear_indexes()
+    for k, h in handles.items():
+        assert DX.index_for(k, SF_ORACLE, **_KINDS[k][1]) is None
+        if h.owns_path:
+            assert not os.path.isdir(os.path.dirname(h.path))
+
+
+def test_nkey_maintenance_leaves_no_catalog_entry(spark, tmp_path):
+    """The nkey ledger is plain parquet: persist → append → delete →
+    compact adds no catalog table, and the folded set still equals
+    ``history_nkey_index`` over the same documents."""
+    from pyspark.sql import functions as F
+
+    from etl_project_spark.catalog import read_table
+    from etl_project_spark.streaming.pipeline import history_nkey_index
+
+    before = {t.name for t in spark.catalog.listTables()}
+    history = DX._history_docs(spark, SF_ORACLE)
+    older = history.filter(F.col("source") != "src18")
+    gone = read_table(spark, SF_ORACLE, "documents").filter(
+        (F.col("source") == "src18") & (F.col("doc_id") % 2 == 0)
+    )
+    assert gone.count() > 0
+    idx = DX.persist_nkey_index(
+        spark, SF_ORACLE, path=str(tmp_path / "nk"), register=False, docs=older
+    )
+    DX.append_nkey_index(spark, SF_ORACLE, idx, batch_source="src18")
+    DX.delete_from_nkey_index(spark, idx, gone)
+    DX.compact_nkey_index(spark, idx)
+    assert {t.name for t in spark.catalog.listTables()} == before
+
+    folded = sorted(r.nkey for r in DX.load_nkey_index(spark, idx).collect())
+    alive = history.join(gone.select("doc_id"), "doc_id", "left_anti")
+    expected = sorted(r.nkey for r in history_nkey_index(alive).collect())
+    assert folded == expected and folded
+
+
+def test_failed_compaction_changes_nothing(spark, tmp_path):
+    """The shared directory swap writes its staging dir first: a frame
+    that raises on the executor (``raise_error`` on one row) leaves the
+    index directory and its rows as they were, and the next compaction
+    leaves no staging dir behind."""
+    import os
+
+    from pyspark.sql import functions as F
+
+    idx = DX.persist_nkey_index(
+        spark, SF_ORACLE, path=str(tmp_path / "nk"), register=False
+    )
+    DX.append_nkey_index(spark, SF_ORACLE, idx)
+
+    def ledger():
+        return sorted(tuple(r) for r in spark.read.parquet(idx.path).collect())
+
+    files, rows = sorted(os.listdir(idx.path)), ledger()
+    live = sorted(r.nkey for r in DX.load_nkey_index(spark, idx).collect())
+    bad = rows[len(rows) // 2][0]
+    poisoned = spark.read.parquet(idx.path).withColumn(
+        "nkey",
+        F.when(F.col("nkey") == bad, F.raise_error(F.lit("poisoned compaction")))
+        .otherwise(F.col("nkey")),
+    )
+    with pytest.raises(Exception, match="poisoned compaction"):
+        DX._swap_in(poisoned, idx.path)
+    assert sorted(os.listdir(idx.path)) == files and ledger() == rows
+
+    DX.compact_nkey_index(spark, idx)
+    assert sorted(os.listdir(tmp_path / "nk")) == ["nkeys"]  # no staging left
+    assert sorted(r.nkey for r in DX.load_nkey_index(spark, idx).collect()) == live
 
 
 def _run_minhash(spark):
@@ -225,13 +360,13 @@ def _run_minhash(spark):
 
 
 def test_minhash_index_served_equals_inflight(spark, tmp_path):
-    DX.clear_dedup_indexes()
+    DX.clear_indexes()
     inflight = _run_minhash(spark)
     DX.persist_minhash_index(spark, SF_ORACLE, path=str(tmp_path / "midx"))
     try:
         served = _run_minhash(spark)
     finally:
-        DX.clear_dedup_indexes()
+        DX.clear_indexes()
     assert served == inflight and inflight
 
 
@@ -250,7 +385,7 @@ def test_minhash_index_served_plan_skips_signing_scan(spark, tmp_path):
             .toString()
         )
     finally:
-        DX.clear_dedup_indexes()
+        DX.clear_indexes()
     assert "text:string" not in plan  # no corpus scan survives
     assert "_h0:bigint" in plan  # signature parquet is the source
     # guard the assertion against plan-string drift: the inflight plan
@@ -269,25 +404,28 @@ def test_minhash_index_param_mismatch_refuses(spark, tmp_path):
     idx = DX.persist_minhash_index(spark, SF_ORACLE, path=str(tmp_path / "midx"))
     try:
         assert (
-            DX.minhash_index_for(
-                SF_ORACLE, n_hashes=64, shingle_k=3, use_token_ngrams=True
+            DX.index_for(
+                DX.MinHashIndex, SF_ORACLE,
+                n_hashes=64, shingle_k=3, use_token_ngrams=True
             )
             is idx
         )
         assert (
-            DX.minhash_index_for(
-                SF_ORACLE, n_hashes=64, shingle_k=5, use_token_ngrams=True
+            DX.index_for(
+                DX.MinHashIndex, SF_ORACLE,
+                n_hashes=64, shingle_k=5, use_token_ngrams=True
             )
             is None
         )
         assert (
-            DX.minhash_index_for(
-                "/nonexistent", n_hashes=64, shingle_k=3, use_token_ngrams=True
+            DX.index_for(
+                DX.MinHashIndex, "/nonexistent",
+                n_hashes=64, shingle_k=3, use_token_ngrams=True
             )
             is None
         )
     finally:
-        DX.clear_dedup_indexes()
+        DX.clear_indexes()
 
 
 def test_minhash_indexed_query_matches_inflight(spark, tmp_path):
@@ -296,7 +434,7 @@ def test_minhash_indexed_query_matches_inflight(spark, tmp_path):
     scan the documents text column, and — register=False — running it
     must NOT flip the process-local serving switch for the inflight
     twin (the mid-sweep timing-corruption hazard its docstring pins)."""
-    DX.clear_dedup_indexes()
+    DX.clear_indexes()
     spark.catalog.clearCache()
     inflight = _run_minhash(spark)
     df = all_specs()["q_minhash_indexed_pairs"].builder(spark, SF_ORACLE)
@@ -307,8 +445,9 @@ def test_minhash_indexed_query_matches_inflight(spark, tmp_path):
     assert indexed == inflight and indexed
     # caller-scoped build: the registry must still be empty
     assert (
-        DX.minhash_index_for(
-            SF_ORACLE, n_hashes=64, shingle_k=3, use_token_ngrams=True
+        DX.index_for(
+            DX.MinHashIndex, SF_ORACLE,
+            n_hashes=64, shingle_k=3, use_token_ngrams=True
         )
         is None
     )
@@ -319,7 +458,7 @@ def test_nkey_indexed_query_matches_inflight(spark, tmp_path):
     row-for-row, serve history from parquet (no history-predicate
     documents scan in the plan), and leave the serving registry
     untouched (register=False)."""
-    DX.clear_dedup_indexes()
+    DX.clear_indexes()
     spark.catalog.clearCache()
     inflight = sorted(
         tuple(r)
@@ -339,7 +478,7 @@ def test_nkey_indexed_query_matches_inflight(spark, tmp_path):
     assert "Not(EqualTo(source" not in plan
     indexed = sorted(tuple(r) for r in df.collect())
     assert indexed == inflight and indexed
-    assert DX.nkey_index_for(SF_ORACLE) is None
+    assert DX.index_for(DX.NkeyIndex, SF_ORACLE) is None
 
 
 def test_minhash_append_grown_equals_rebuild(spark, tmp_path):
@@ -348,7 +487,7 @@ def test_minhash_append_grown_equals_rebuild(spark, tmp_path):
     FRAME-IDENTICAL to a whole-corpus rebuild — same signatures, same
     gram sets — so every ``signed=`` consumer is oblivious to how the
     index was built."""
-    DX.clear_dedup_indexes()
+    DX.clear_indexes()
     grown = DX.persist_minhash_index(
         spark, SF_ORACLE, path=str(tmp_path / "hist"), register=False,
         docs=DX._history_docs(spark, SF_ORACLE),
@@ -455,7 +594,7 @@ def test_minhash_append_query_matches_inflight(spark):
     probe) must return the inflight whole-corpus pair set row-for-row,
     probe from the grown parquet (no text scan in the probe plan), and
     leave the serving registry untouched (register=False)."""
-    DX.clear_dedup_indexes()
+    DX.clear_indexes()
     spark.catalog.clearCache()
     inflight = _run_minhash(spark)
     df = all_specs()["q_minhash_index_append_pairs"].builder(spark, SF_ORACLE)
@@ -465,8 +604,9 @@ def test_minhash_append_query_matches_inflight(spark):
     appended = sorted(tuple(r) for r in df.collect())
     assert appended == inflight and appended
     assert (
-        DX.minhash_index_for(
-            SF_ORACLE, n_hashes=64, shingle_k=3, use_token_ngrams=True
+        DX.index_for(
+            DX.MinHashIndex, SF_ORACLE,
+            n_hashes=64, shingle_k=3, use_token_ngrams=True
         )
         is None
     )
@@ -546,7 +686,7 @@ def test_nkey_append_query_matches_inflight(spark):
     src19 audit) must equal the inflight audit row-for-row and serve
     history from the grown parquet (positive anchor: the bare-nkey
     ReadSchema; negative: no history-predicate documents scan)."""
-    DX.clear_dedup_indexes()
+    DX.clear_indexes()
     spark.catalog.clearCache()
     inflight = sorted(
         tuple(r)
@@ -560,11 +700,11 @@ def test_nkey_append_query_matches_inflight(spark):
     assert "Not(EqualTo(source" not in plan
     appended = sorted(tuple(r) for r in df.collect())
     assert appended == inflight and appended
-    assert DX.nkey_index_for(SF_ORACLE) is None
+    assert DX.index_for(DX.NkeyIndex, SF_ORACLE) is None
 
 
 def test_nkey_index_served_equals_inflight(spark, tmp_path):
-    DX.clear_dedup_indexes()
+    DX.clear_indexes()
 
     def run():
         return sorted(
@@ -577,11 +717,11 @@ def test_nkey_index_served_equals_inflight(spark, tmp_path):
     inflight = run()
     idx = DX.persist_nkey_index(spark, SF_ORACLE, path=str(tmp_path / "nidx"))
     try:
-        assert DX.nkey_index_for(SF_ORACLE) is idx
-        assert DX.nkey_index_for("/nonexistent") is None
+        assert DX.index_for(DX.NkeyIndex, SF_ORACLE) is idx
+        assert DX.index_for(DX.NkeyIndex, "/nonexistent") is None
         served = run()
     finally:
-        DX.clear_dedup_indexes()
+        DX.clear_indexes()
     assert served == inflight and inflight
 
 
@@ -718,7 +858,7 @@ def test_minhash_delete_query_nonvacuous(spark):
     from etl_project_spark.catalog import read_table
     from etl_project_spark.operators.dedup import minhash_near_dup_pairs
 
-    DX.clear_dedup_indexes()
+    DX.clear_indexes()
     after = {
         (r.id_a, r.id_b)
         for r in all_specs()["q_minhash_index_delete_pairs"]
@@ -761,8 +901,9 @@ def test_minhash_delete_query_nonvacuous(spark):
     assert removed and all(a in tomb or b in tomb for a, b in removed)
     assert all(a not in tomb and b not in tomb for a, b in after)
     assert (
-        DX.minhash_index_for(
-            SF_ORACLE, n_hashes=64, shingle_k=3, use_token_ngrams=True
+        DX.index_for(
+            DX.MinHashIndex, SF_ORACLE,
+            n_hashes=64, shingle_k=3, use_token_ngrams=True
         )
         is None
     )
@@ -908,7 +1049,7 @@ def test_simhash_append_query_depends_on_the_append(spark):
         stream_simhash_near_dup,
     )
 
-    DX.clear_dedup_indexes()
+    DX.clear_indexes()
     got = sorted(
         tuple(r)
         for r in all_specs()["q_simhash_index_append_matches"]
@@ -949,4 +1090,7 @@ def test_simhash_append_query_depends_on_the_append(spark):
         r for r in got if r[0] >= 50_000_000 and r[1] == r[0] - 50_000_000
     ]
     assert clone_hits  # clone ↔ its own original among the appended rows
-    assert DX.simhash_index_for(SF_ORACLE, max_hamming=6, eq_blocks=2) is None
+    assert (
+        DX.index_for(DX.SimHashIndex, SF_ORACLE, max_hamming=6, eq_blocks=2)
+        is None
+    )

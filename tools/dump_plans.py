@@ -1,15 +1,16 @@
 #!/usr/bin/env python
-"""Dump .explain("formatted") for bench queries to plans/r18/<q>_<tag>.txt.
+"""Dump .explain("formatted") for bench queries to plans/<round>/<q>_<tag>.txt.
 
-Optimization-round evidence (round 18, same contract as
-tools/dump_plans_r17.py): one file per query per tag so before/after
+Optimization-round evidence: one file per query per tag so before/after
 plan diffs are committable. Index-building queries execute their build
 as part of the builder; plans are captured AFTER the build, which is
 the served probe plan — the same thing the bench times after the
 build jobs.
 
-Usage: python tools/dump_plans_r18.py <tag> [query ...]
-       (no queries -> the full bench list)
+Usage: python tools/dump_plans.py <round> <tag> [query ...]
+       e.g. python tools/dump_plans.py r18 before q_minhash_indexed_pairs
+       (no queries -> the full bench list; corpus: $SPARK_GRAFT_SF_DIR,
+       default as in bench.py)
 """
 from __future__ import annotations
 
@@ -19,22 +20,22 @@ import sys
 REPO = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
 sys.path.insert(0, REPO)
 
-SF_DIR = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-
 
 def main() -> None:
-    tag = sys.argv[1]
+    if len(sys.argv) < 3:
+        sys.exit(__doc__)
+    rnd, tag = sys.argv[1], sys.argv[2]
     import bench
     from etl_project_spark.plans.registry import all_specs
     from etl_project_spark.session import get_spark, release_persists
 
-    names = sys.argv[2:] or list(bench.BENCH_QUERIES)
-    spark = get_spark("plans-r18")
+    names = sys.argv[3:] or list(bench.BENCH_QUERIES)
+    spark = get_spark(f"plans-{rnd}")
     specs = all_specs()
-    out_dir = os.path.join(REPO, "plans", "r18")
+    out_dir = os.path.join(REPO, "plans", rnd)
     os.makedirs(out_dir, exist_ok=True)
     for name in names:
-        df = specs[name].builder(spark, SF_DIR)
+        df = specs[name].builder(spark, bench.SF_DIR)
         plan = df._sc._jvm.PythonSQLUtils.explainString(
             df._jdf.queryExecution(), "formatted"
         )
