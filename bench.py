@@ -210,7 +210,7 @@ def host_calib() -> dict:
 
 def main() -> None:
     from etl_project_spark.plans.registry import all_specs
-    from etl_project_spark.session import get_spark, release_persists
+    from etl_project_spark.session import get_spark, query_scope
 
     # Host calib at START as well as end (round-17 verdict #6): calib
     # was measured only at run end, so a mid-run host throttle was
@@ -252,22 +252,20 @@ def main() -> None:
         timings: dict[str, float] = {}
         for name in subset:
             spec = specs[name]
-            t0 = time.perf_counter()
-            df = spec.builder(spark, SF_DIR)
-            # Force full evaluation of every column (count alone lets Spark
-            # prune projections); write.noop-style materialization.
-            df.write.format("noop").mode("overwrite").save()
-            timings[name] = round(time.perf_counter() - t0, 3)
-            # Release caches the query created (pagerank graph, LSH
-            # signatures, CC checkpoints) OUTSIDE its timed window: a
-            # long-lived session that never unpersists accumulates
-            # storage blocks across queries — the round-5 verdict's
-            # CacheManager-warning finding — and each query should be
-            # timed from a clean cache, same as its cold run.
-            # BLOCKING: async eviction bleeds into the next query's
-            # timed window and can double-reside with its shuffle —
-            # the r13 sweep OOM mechanism (tools/sweep.py).
-            release_persists(blocking=True)
+            # The scope releases the caches the query created (pagerank
+            # graph, LSH signatures, CC checkpoints) OUTSIDE its timed
+            # window: a long-lived session that never unpersists
+            # accumulates storage blocks across queries — the round-5
+            # verdict's CacheManager-warning finding — and each query
+            # should be timed from a clean cache, same as its cold run.
+            with query_scope(spark, name):
+                t0 = time.perf_counter()
+                df = spec.builder(spark, SF_DIR)
+                # Force full evaluation of every column (count alone lets
+                # Spark prune projections); write.noop-style
+                # materialization.
+                df.write.format("noop").mode("overwrite").save()
+                timings[name] = round(time.perf_counter() - t0, 3)
         return timings
 
     timings = run_all()

@@ -1318,8 +1318,8 @@ def ivf_rebalance_cells(
     the near halves; merged far groups get NEW ids appended), which
     the caller must use for every subsequent probe/append — probes
     with the old list would silently miss the moved vectors. The
-    recall + scan-mass economics are measured in
-    tools/ivf_drift_ab.py (BASELINE.md round 17); the repair cycle is
+    recall + scan-mass economics are in BASELINE.md (round-17 IVF
+    drift economics); the repair cycle is
     pinned in tests/test_ann_index.py."""
     new_centroids = [list(map(float, c)) for c in centroids]
     splits: list[tuple[int, list[float], list[float], int]] = []

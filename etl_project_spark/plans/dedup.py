@@ -1920,50 +1920,6 @@ def _cdc_corpus(spark: SparkSession, sf_dir: str) -> DataFrame:
     return d.select("doc_id", "text").unionByName(clones)
 
 
-def _cdc_chunk_frame_hof(
-    spark: SparkSession, sf_dir: str, wide: bool = False
-) -> DataFrame:
-    """Former array-HOF form of ``_cdc_chunk_frame``, retained as the
-    A/B control for ``tools/cdc_ab.py`` (measured BASELINE §r14: the
-    r13 interpreted-HOF diagnosis REFUTED — per-element md5 dominates;
-    the 11.8x gain at both decades is scan WIDTH). ``wide=True``
-    applies the row form's scan-width repartition so the A/B
-    decomposes parallelism vs expression-form gains. Not wired to any
-    registered query.
-    """
-    corpus = _cdc_corpus(spark, sf_dir)
-    if wide:
-        par = max(
-            spark.sparkContext.defaultParallelism, corpus.rdd.getNumPartitions()
-        )
-        corpus = corpus.repartition(par, "doc_id")
-    w, w1 = _CDC_WINDOW, _CDC_WINDOW - 1
-    bounds = corpus.select(
-        "doc_id",
-        "text",
-        F.length("text").alias("n"),
-        F.expr(
-            f"CASE WHEN length(text) >= {w} THEN "
-            f" filter(sequence({w}, length(text)),"
-            f"        i -> substring(md5(cast(substring(text, i - {w1}, {w}) AS BINARY)),"
-            f"                       1, 2) <= '{_CDC_MASK}')"
-            " ELSE cast(array() AS array<int>) END"
-        ).alias("b"),
-    )
-    return bounds.select(
-        "doc_id",
-        F.explode(
-            F.expr(
-                "transform(sequence(1, size(b) + 1),"
-                " j -> substring(text,"
-                "   CASE WHEN j = 1 THEN 1 ELSE element_at(b, j - 1) + 1 END,"
-                "   (CASE WHEN j = size(b) + 1 THEN n ELSE element_at(b, j) END)"
-                "     - (CASE WHEN j = 1 THEN 1 ELSE element_at(b, j - 1) + 1 END) + 1))"
-            )
-        ).alias("chunk"),
-    ).filter(F.length("chunk") > 0)
-
-
 def _cdc_chunk_frame(spark: SparkSession, sf_dir: str) -> DataFrame:
     """(doc_id, chunk) rows for the planted-clone CDC corpus — see
     :func:`_cdc_chunks_of` for the physical shape."""

@@ -10,6 +10,8 @@ from __future__ import annotations
 
 import logging
 import os
+from collections.abc import Iterator
+from contextlib import contextmanager
 
 from pyspark.sql import SparkSession
 
@@ -74,11 +76,11 @@ def tune_session(spark: SparkSession) -> SparkSession:
 #: DataFrames persisted inside query builders, awaiting release by the
 #: harness (bench / long-lived sessions). A builder can't unpersist its
 #: own caches — they must stay live until the caller's action runs — so
-#: cache LIFETIME is the caller's job: run the action, then call
-#: :func:`release_persists`. One-shot sessions can ignore this (process
-#: exit frees everything); the round-5 verdict's CacheManager-warning /
-#: cache-growth finding is exactly what skipping it costs a long-lived
-#: session.
+#: cache LIFETIME is the caller's job: run the action inside
+#: :func:`query_scope`, or call :func:`release_persists` after it.
+#: One-shot sessions can ignore this (process exit frees everything);
+#: the round-5 verdict's CacheManager-warning / cache-growth finding is
+#: exactly what skipping it costs a long-lived session.
 _SCOPED_PERSISTS: list = []
 
 
@@ -103,11 +105,8 @@ def release_persists(blocking: bool = False) -> int:
 
     Safe to call at any point after the caller's action has
     materialized — idempotent, never raises. Default is non-blocking
-    (cheapest for one-shot callers); pass ``blocking=True`` between
-    back-to-back heavy queries in one session — a non-blocking release
-    frees the blocks asynchronously, so the NEXT query's shuffle can
-    transiently double-reside with the previous query's cache (the
-    round-13 sf1 sweep OOM'd exactly this way at 8g heap).
+    (cheapest for one-shot callers); back-to-back queries in one
+    session release through :func:`query_scope`, which blocks.
     """
     n = 0
     while _SCOPED_PERSISTS:
@@ -118,6 +117,38 @@ def release_persists(blocking: bool = False) -> int:
         except Exception:
             pass
     return n
+
+
+#: The thread-local properties ``SparkContext.setJobGroup`` sets.
+_JOB_GROUP_PROPS = (
+    "spark.jobGroup.id",
+    "spark.job.description",
+    "spark.job.interruptOnCancel",
+)
+
+
+@contextmanager
+def query_scope(spark: SparkSession, name: str) -> Iterator[None]:
+    """Run one registry query: its jobs in job group ``name``, its
+    tracked caches released on exit.
+
+    The calling thread's previous job group is restored on exit. The
+    release runs on success and on an exception alike, and it blocks:
+    a non-blocking release frees the blocks asynchronously, so the NEXT
+    query's shuffle can transiently double-reside with this query's
+    cache (the round-13 sf1 sweep OOM'd an 8g heap exactly this way).
+    A caller that times the query closes its timed window inside the
+    ``with`` block, so the release stays out of it.
+    """
+    sc = spark.sparkContext
+    saved = {k: sc.getLocalProperty(k) for k in _JOB_GROUP_PROPS}
+    sc.setJobGroup(name, name)
+    try:
+        yield
+    finally:
+        release_persists(blocking=True)
+        for k, v in saved.items():
+            sc.setLocalProperty(k, v)
 
 
 def context_dir(spark: SparkSession, name: str) -> str:

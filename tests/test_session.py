@@ -7,6 +7,8 @@ import subprocess
 import sys
 import textwrap
 
+import pytest
+
 REPO = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
 
 
@@ -75,3 +77,47 @@ def test_tune_session_records_failed_confs_and_logs_once(spark, monkeypatch, cap
     assert list(sc._etl_failed_confs) == [key]
     assert sum(key in r.getMessage() for r in caplog.records) == 1
     assert spark.conf.get("spark.sql.session.timeZone") == "UTC"
+
+
+def test_query_scope_attributes_jobs_and_releases_caches(spark):
+    """Jobs run inside ``query_scope`` carry its job group, the caller's
+    group comes back on exit, and the query's ``scoped_persist`` caches
+    are gone after exit, also when the body raises."""
+    from etl_project_spark.session import query_scope, release_persists, scoped_persist
+
+    sc = spark.sparkContext
+    tracker = sc.statusTracker()
+    release_persists(blocking=True)  # whatever earlier tests left tracked
+    entry_rdds = sc._jsc.getPersistentRDDs().size()
+
+    def query():
+        df = scoped_persist(spark.range(200).selectExpr("id % 7 AS k").groupBy("k").count())
+        assert df.count() == 7
+        assert sc._jsc.getPersistentRDDs().size() == entry_rdds + 1
+
+    sc.setJobGroup("caller", "caller's group")
+    try:
+        with query_scope(spark, "scope-test-ok"):
+            query()
+        scoped = set(tracker.getJobIdsForGroup("scope-test-ok"))
+        assert scoped
+        assert sc.getLocalProperty("spark.jobGroup.id") == "caller"
+        assert sc.getLocalProperty("spark.job.description") == "caller's group"
+        assert sc._jsc.getPersistentRDDs().size() == entry_rdds
+
+        spark.range(10).count()
+        after = set(tracker.getJobIdsForGroup("caller"))
+        assert after and not after & scoped
+        assert set(tracker.getJobIdsForGroup("scope-test-ok")) == scoped
+
+        with pytest.raises(RuntimeError, match="query failed"):
+            with query_scope(spark, "scope-test-raises"):
+                query()
+                raise RuntimeError("query failed")
+        assert tracker.getJobIdsForGroup("scope-test-raises")
+        assert sc.getLocalProperty("spark.jobGroup.id") == "caller"
+        assert sc._jsc.getPersistentRDDs().size() == entry_rdds
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+        sc.setLocalProperty("spark.job.description", None)
+        sc.setLocalProperty("spark.job.interruptOnCancel", None)

@@ -26,28 +26,15 @@ import sys
 import time
 
 
-def _host_calib() -> dict:
-    """Same CPU microbench as bench.py's host_calib, inlined so the
-    version under test (which may predate host_calib) never shadows it."""
-    import numpy as np
-
-    a = np.random.default_rng(7).random((512, 512))
-    t0 = time.perf_counter()
-    for _ in range(20):
-        a = a @ a / np.linalg.norm(a)
-    numpy_s = round(time.perf_counter() - t0, 4)
-    t0 = time.perf_counter()
-    s = 0
-    for i in range(2_000_000):
-        s += i % 7
-    python_s = round(time.perf_counter() - t0, 4)
-    return {"numpy_matmul_s": numpy_s, "python_loop_s": python_s}
-
-
 def main() -> None:
     repo = os.path.abspath(sys.argv[1])
     label = sys.argv[2]
     names = sys.argv[3:]
+    # host_calib comes from this tool's own checkout, imported BEFORE the
+    # checkout under test goes on sys.path: that one may predate it.
+    sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
+    from bench import host_calib
+
     sys.path.insert(0, repo)
 
     sf_dir = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
@@ -65,7 +52,8 @@ def main() -> None:
 
     def release() -> None:
         # Version-neutral cache release: clearCache() unpersists every
-        # cached plan regardless of which persist API created it.
+        # cached plan regardless of which persist API created it, and
+        # runs on checkouts that predate session.query_scope.
         spark.catalog.clearCache()
 
     out: dict[str, dict] = {}
@@ -84,7 +72,7 @@ def main() -> None:
             "passes": passes,
         }
 
-    print(json.dumps({"label": label, "host_calib": _host_calib(), "queries": out}))
+    print(json.dumps({"label": label, "host_calib": host_calib(), "queries": out}))
     spark.stop()
 
 

@@ -1,6 +1,7 @@
 """The project's single definition of 'hash parity' between a Spark
-result and its DuckDB oracle, shared by verify_driver.py and
-parity_sf.py so the two checkers can never silently diverge.
+result and its DuckDB oracle, and of the oracle's table views, shared
+by verify_driver.py and parity_sf.py so the two checkers can never
+silently diverge.
 
 Semantics: canonicalize both frames (columns sorted by name upstream by
 the caller's SELECT contract; rows sorted by all columns), then compare
@@ -13,6 +14,15 @@ sentinel.
 from __future__ import annotations
 
 import pandas as pd
+
+# Opt into pandas' future fillna behavior (no silent downcasting):
+# silences the FutureWarning the object-dtype fillna below would
+# emit on every NULL-bearing comparison, and pins the semantics so
+# a pandas upgrade can't change them under us (round-5 advice).
+try:
+    pd.set_option("future.no_silent_downcasting", True)
+except Exception:
+    pass  # option removed once the behavior becomes default
 
 
 def canon(df: pd.DataFrame) -> pd.DataFrame:
@@ -37,3 +47,18 @@ def frames_match(sp: pd.DataFrame, oc: pd.DataFrame) -> bool:
         if not same:
             return False
     return True
+
+
+def oracle_connection(sf_dir: str):
+    """A DuckDB connection with one view per corpus table under ``sf_dir``,
+    named as the registry's oracle SQL reads them."""
+    import duckdb
+
+    from etl_project_spark.catalog import TABLES
+
+    con = duckdb.connect()
+    for t in TABLES:
+        con.execute(
+            f"CREATE VIEW {t} AS SELECT * FROM read_parquet('{sf_dir}/{t}.parquet')"
+        )
+    return con

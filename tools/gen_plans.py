@@ -121,10 +121,52 @@ def _unpartitioned_windows(formatted: str) -> int:
     return n
 
 
+_PYTHON_STAGES = r"(MapInPandas|ArrowEvalPython|BatchEvalPython|FlatMapGroupsInPandas)"
+
+
+def plan_stats(formatted: str) -> dict:
+    """Distinct-node counts of one ``explain("formatted")`` dump: shuffle
+    Exchanges, broadcast and sort-merge joins, vectorized scans, Python
+    stages and unpartitioned windows."""
+    tree = formatted.split("\n\n")[0]
+
+    def uniq(op: str) -> int:
+        # The formatted tree reprints an InMemoryRelation's child
+        # plan under EVERY InMemoryTableScan referencing it, so raw
+        # substring counts inflate with each cache reference (the
+        # round-6 pagerank "28 exchanges" was this artifact). Node
+        # ids are stable across reprints — count distinct ids.
+        return len(set(re.findall(rf"\b{op}(?:\s+\w+)*\s+\((\d+)\)", tree)))
+
+    return {
+        "exchanges": uniq("Exchange"),  # \b keeps BroadcastExchange out
+        "broadcast_joins": uniq("BroadcastHashJoin"),
+        "sort_merge_joins": uniq("SortMergeJoin"),
+        "vectorized_scans": formatted.count("Batched: true"),
+        "python_stages": sorted(set(re.findall(_PYTHON_STAGES, tree))),
+        "unpartitioned_windows": _unpartitioned_windows(formatted),
+    }
+
+
+def stats_line(stats: dict) -> str:
+    """One-line summary of :func:`plan_stats`."""
+    line = (
+        f"shuffles (Exchange): {stats['exchanges']}"
+        f" · broadcast joins: {stats['broadcast_joins']}"
+        f" · sort-merge joins: {stats['sort_merge_joins']}"
+        f" · vectorized scans: {stats['vectorized_scans']}"
+    )
+    if stats["python_stages"]:
+        line += " · Python stages: " + ", ".join(stats["python_stages"])
+    if stats["unpartitioned_windows"]:
+        line += f" · unpartitioned windows: {stats['unpartitioned_windows']}"
+    return line
+
+
 def main() -> None:
     import __spark_entry__ as mod
     from bench import BENCH_QUERIES
-    from etl_project_spark.session import get_spark
+    from etl_project_spark.session import get_spark, query_scope
 
     spark = get_spark("gen-plans", cpus=8)
     spark.sparkContext.setLogLevel("ERROR")
@@ -148,52 +190,26 @@ def main() -> None:
         if name in seen:
             continue
         seen.add(name)
-        df = qs[name](spark, sf)
-        qe = df._jdf.queryExecution()
-        formatted = qe.explainString(mode.fromString("formatted"))
-        tree = formatted.split("\n\n")[0]
-
-        def uniq(op: str) -> int:
-            # The formatted tree reprints an InMemoryRelation's child
-            # plan under EVERY InMemoryTableScan referencing it, so raw
-            # substring counts inflate with each cache reference (the
-            # round-6 pagerank "28 exchanges" was this artifact). Node
-            # ids are stable across reprints — count distinct ids.
-            return len(set(re.findall(rf"\b{op}(?:\s+\w+)*\s+\((\d+)\)", tree)))
-
-        n_exch = uniq("Exchange")  # \b keeps BroadcastExchange out, as before
-        n_bhj = uniq("BroadcastHashJoin")
-        n_smj = uniq("SortMergeJoin")
-        n_batched = formatted.count("Batched: true")
+        with query_scope(spark, name):
+            df = qs[name](spark, sf)
+            qe = df._jdf.queryExecution()
+            formatted = qe.explainString(mode.fromString("formatted"))
+        st = plan_stats(formatted)
         pushed = sorted(
             {l.strip() for l in formatted.splitlines() if "PushedFilters" in l and "[]" not in l}
         )
         schemas = sorted(
             {l.strip()[:130] for l in formatted.splitlines() if "ReadSchema" in l}
         )
-        pystages = sorted(
-            set(
-                re.findall(
-                    r"(MapInPandas|ArrowEvalPython|BatchEvalPython|FlatMapGroupsInPandas)",
-                    tree,
-                )
-            )
-        )
         out.append(f"## {name}\n")
-        stats = (
-            f"- shuffles (Exchange): {n_exch} · broadcast joins: {n_bhj}"
-            f" · sort-merge joins: {n_smj} · vectorized scans: {n_batched}"
-        )
-        if pystages:
-            stats += " · Python stages: " + ", ".join(pystages)
-        n_upw = _unpartitioned_windows(formatted)
-        if n_upw:
+        stats = "- " + stats_line(st)
+        if st["unpartitioned_windows"]:
             reason = BOUNDED_UNPARTITIONED_WINDOWS.get(name)
             if reason is None:
                 window_failures.append(name)
-                stats += f" · **UNPARTITIONED WINDOWS: {n_upw} (UNAUDITED)**"
+                stats += " **(UNAUDITED)**"
             else:
-                stats += f" · unpartitioned windows: {n_upw} (bounded: {reason})"
+                stats += f" (bounded: {reason})"
         out.append(stats)
         if pushed:
             out.append("- pushdown: " + "; ".join(p[:140] for p in pushed[:4]))

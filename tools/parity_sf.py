@@ -15,46 +15,29 @@ import sys
 REPO = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
 sys.path.insert(0, REPO)
 
-from tools.compare_frames import canon, frames_match  # noqa: E402
-
-TABLES = (
-    "region nation customer supplier part orders lineitem events documents embeddings"
-).split()
-
+from tools.compare_frames import canon, frames_match, oracle_connection  # noqa: E402
 
 
 def main() -> int:
     sf_dir, names = sys.argv[1], sys.argv[2:]
-    import duckdb
-    import pandas as pd
-
-    try:
-        pd.set_option("future.no_silent_downcasting", True)
-    except Exception:
-        pass
-
     from etl_project_spark.plans.registry import all_specs
-    from etl_project_spark.session import get_spark, release_persists
+    from etl_project_spark.session import get_spark, query_scope
 
     spark = get_spark("parity-sf", cpus=8, driver_memory="6g")
     specs = all_specs()
     if names == ["--all"]:
         names = sorted(specs)
-    con = duckdb.connect()
-    for t in TABLES:
-        con.execute(
-            f"CREATE VIEW {t} AS SELECT * FROM read_parquet('{sf_dir}/{t}.parquet')"
-        )
+    con = oracle_connection(sf_dir)
     failed = []
     for name in names:
         spec = specs[name]
         if spec.oracle is None:
-            cnt = spec.builder(spark, sf_dir).count()
+            with query_scope(spark, name):
+                cnt = spec.builder(spark, sf_dir).count()
             print(f"{name:45s} rows={cnt} (rows-only)")
-            release_persists()
             continue
-        sp = canon(spec.builder(spark, sf_dir).toPandas())
-        release_persists()
+        with query_scope(spark, name):
+            sp = canon(spec.builder(spark, sf_dir).toPandas())
         oc = canon(con.execute(spec.oracle).fetchdf())
         ok = frames_match(sp, oc)
         print(f"{name:45s} shape={sp.shape} match={bool(ok)}")

@@ -279,12 +279,12 @@ def main() -> int:
     only = set(sys.argv[3].split(",")) if len(sys.argv) > 3 else None
 
     from etl_project_spark.plans.registry import all_specs
-    from etl_project_spark.session import get_spark, release_persists
+    from etl_project_spark.session import get_spark, query_scope
 
     # 20g heap unless the env overrides: a full-registry sweep at sf1+
     # stacks one query's lingering cache blocks against the next
-    # query's shuffle; the default 8g OOM'd in round 13 (the blocking
-    # release below is the fix, the headroom is the belt)
+    # query's shuffle; the default 8g OOM'd in round 13 (query_scope's
+    # blocking release is the fix, the headroom is the belt)
     spark = get_spark(
         "sweep",
         driver_memory=os.environ.get("SPARK_GRAFT_DRIVER_MEM", "20g"),
@@ -299,12 +299,13 @@ def main() -> int:
     times: dict[str, float] = {}
     failed: list[str] = []
     for name, spec in specs.items():
-        t0 = time.perf_counter()
         try:
-            # noop write forces full-column evaluation (count() lets
-            # Spark prune projections and would under-measure).
-            spec.builder(spark, sf_dir).write.format("noop").mode("overwrite").save()
-            times[name] = round(time.perf_counter() - t0, 2)
+            with query_scope(spark, name):
+                t0 = time.perf_counter()
+                # noop write forces full-column evaluation (count() lets
+                # Spark prune projections and would under-measure).
+                spec.builder(spark, sf_dir).write.format("noop").mode("overwrite").save()
+                times[name] = round(time.perf_counter() - t0, 2)
             # stream progress (flush: the sweep runs for minutes and is
             # often watched from a tail -f; buffered output hides which
             # query a straggler stage belongs to)
@@ -313,12 +314,6 @@ def main() -> int:
             failed.append(name)
             print(f"{name:45s} FAIL {type(e).__name__}: {str(e)[:140]}")
         finally:
-            # scoped_persist caches (LPA edges, minhash posting lists,
-            # ...) must not accumulate across a 290-query sweep.
-            # BLOCKING: with async release the next heavy query's
-            # shuffle transiently double-resides with this query's
-            # cache — the r13 sf1 sweep OOM'd an 8g heap that way.
-            release_persists(blocking=True)
             # Shuffle files of FINISHED queries persist in /tmp/spark-*
             # until ContextCleaner notices the stage references are
             # dead — which needs a JVM GC, and the default periodic GC

@@ -18,28 +18,13 @@ REPO = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
 sys.path.insert(0, REPO)
 
 SF = "/root/testdata/sf0.01"
-TABLES = (
-    "region nation customer supplier part orders lineitem events documents embeddings"
-).split()
 
-
-from tools.compare_frames import canon, frames_match  # noqa: E402
+from tools.compare_frames import canon, frames_match, oracle_connection  # noqa: E402
 
 
 def main() -> int:
     os.chdir("/tmp")  # prove no cwd-relative assumptions in the package
-    import duckdb
-    import pandas as pd
     from pyspark.sql import SparkSession
-
-    # Opt into pandas' future fillna behavior (no silent downcasting):
-    # silences the FutureWarning the object-dtype fillna below would
-    # emit on every NULL-bearing comparison, and pins the semantics so
-    # a pandas upgrade can't change them under us (round-5 advice).
-    try:
-        pd.set_option("future.no_silent_downcasting", True)
-    except Exception:
-        pass  # option removed once the behavior becomes default
 
     import __spark_entry__ as mod
 
@@ -57,11 +42,7 @@ def main() -> int:
     print(f"{len(qs)} queries, {len(osql)} oracle-backed")
 
     names = sys.argv[1:] or sorted(osql)[:: max(1, len(osql) // 3)][:3]
-    con = duckdb.connect()
-    for t in TABLES:
-        con.execute(
-            f"CREATE VIEW {t} AS SELECT * FROM read_parquet('{SF}/{t}.parquet')"
-        )
+    con = oracle_connection(SF)
     failed = []
     for name in names:
         if name not in osql:
